@@ -143,7 +143,6 @@ class EngineConfig:
     def pipeline_config(self) -> PipelineConfig:
         return PipelineConfig(
             allowed_origins=self.allowed_origins or ["env1", "env2"],
-            days_to_keep=self.days_to_keep,
         )
 
     def stream_config(self):

@@ -167,27 +167,11 @@ def grok_parse_into(
     return grok_parse_many(grok, df, col, [(out_col, pattern, condition)])
 
 
-# Built-expression memo for grok_parse_many: the column lists are
-# ~hundreds of py4j expression constructions (one regexp_replace +
-# per-capture element_at/cast/alias per pattern) and the pipeline
-# rebuilds them identically on every run_pipeline call — per
-# micro-batch in streaming, ~0.3-0.8 s of pure driver time (guide §5:
-# the driver should do almost no per-batch work). Column objects are
-# immutable unresolved expression trees, safely reusable across
-# DataFrames; keyed by applicationId exactly like io.py's
-# resolved-frame cache so a new session never sees a stale JVM handle.
-# Entries are keyed by the SPECS' semantic content (out_col + compiled
-# regex + condition key supplied by the caller) and the line
-# expression's string form.
-_PARSE_MANY_MEMO: dict = {}
-
-
 def grok_parse_many(
     grok: Grok,
     df: "DataFrame",
     col: Column | str,
     specs: list[tuple[str, "str | CompiledPattern", Column | None]],
-    memo_condition_key: "str | None" = None,
 ) -> "DataFrame":
     """Parse one line column under several patterns in THREE projections
     total (raw -> array -> structs), however many patterns there are.
@@ -196,34 +180,9 @@ def grok_parse_many(
     ever-growing plan per call (driver-side seconds for a 6-pattern
     pipeline) and nests 3N projections; batching keeps plan depth and
     analysis cost constant in the number of patterns.
-
-    ``memo_condition_key``: opt-in driver-side memoization of the built
-    column expressions. Pass a string that UNIQUELY identifies the
-    condition columns in ``specs`` (they are Column objects and cannot
-    be hashed by value); same key + same patterns + same line column =
-    the cached expression lists are reused instead of rebuilt. Callers
-    whose conditions vary outside the key must leave it None.
     """
     line = F.col(col) if isinstance(col, str) else col
     base_cols = list(df.columns)
-    memo_key = None
-    if memo_condition_key is not None:
-        sig = tuple(
-            (out, _resolve(grok, pat).regex) for out, pat, _ in specs
-        )
-        memo_key = (
-            df.sparkSession.sparkContext.applicationId,
-            memo_condition_key,
-            sig,
-            str(line),
-        )
-        hit = _PARSE_MANY_MEMO.get(memo_key)
-        if hit is not None:
-            raws, arrs, structs = hit
-            df = df.select("*", *raws)
-            df = df.select("*", *arrs)
-            quoted = [F.col(f"`{c}`") for c in base_cols]
-            return df.select(*quoted, *structs)
     raws, arrs, structs = [], [], []
     for out_col, pattern, condition in specs:
         cp = _resolve(grok, pattern)
@@ -256,8 +215,6 @@ def grok_parse_many(
                 F.col(f"__garr_{out_col}").isNotNull(), F.struct(*fields)
             ).alias(out_col)
         )
-    if memo_key is not None:
-        _PARSE_MANY_MEMO[memo_key] = (raws, arrs, structs)
     df = df.select("*", *raws)
     df = df.select("*", *arrs)
     quoted = [F.col(f"`{c}`") for c in base_cols]

@@ -640,8 +640,23 @@ def span_dedup(
 
 
 def _span_staged(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, __toks) rows. The id's VALUE bound is checked here, in-plan:
+    both callers checkpoint this frame, so the check rides the job that
+    already scans every id. An id outside [0, 2^32) would wrap the
+    (id * 2^31 + pos) long key and silently corrupt both ownership
+    order and the arithmetic id decode."""
+    doc_id = F.col(id_col)
+    doc_id = F.when(
+        (doc_id < 0) | (doc_id.cast("long") >= 4294967296),
+        F.raise_error(
+            F.concat(
+                F.lit(f"span dedup: {id_col} outside [0, 2^32): "),
+                doc_id.cast("string"),
+            )
+        ),
+    ).otherwise(doc_id)
     return df.select(
-        F.col(id_col),
+        doc_id.alias(id_col),
         F.split(normalized_text(F.col(text_col)), " ").alias("__toks"),
     )
 

@@ -28,7 +28,9 @@ themselves — one grammar, one lowering, one scoring path:
                                 ``fields`` (``multi_match`` when
                                 several; phrase/wildcard fan out as a
                                 ``should`` of per-field leaves)
-- ``AND`` / ``OR`` / ``NOT`` (and ``&&`` ``||`` ``!``), parentheses,
+- ``AND`` / ``OR`` / ``NOT`` (upper-case only; lower-case ``and``
+  / ``or`` / ``not`` are terms, as in ES), ``&&`` ``||`` ``!``,
+  parentheses,
   ``+``required / ``-``prohibited prefixes -> ``bool`` trees with
   Lucene's occurs-bucketing: in an OR context ``+``/``-`` operands
   become must/must_not of the SAME bool (so ``a +b -c`` keeps ES's
@@ -149,17 +151,10 @@ def _lex_query_string(q: str) -> list[tuple]:
                 esc.append(False)
                 j += 1
         word = "".join(buf)
-        up = word.upper()
-        if up == "AND" and not any(esc):
-            toks.append(("and",))
-            i = j
-            continue
-        if up == "OR" and not any(esc):
-            toks.append(("or",))
-            i = j
-            continue
-        if up == "NOT" and not any(esc):
-            toks.append(("not",))
+        # only UPPER-case AND/OR/NOT are operators (ES query_string);
+        # lower-case and/or/not are ordinary terms
+        if word in ("AND", "OR", "NOT") and not any(esc):
+            toks.append((word.lower(),))
             i = j
             continue
         # field prefix: split at the first UNESCAPED ':' when the

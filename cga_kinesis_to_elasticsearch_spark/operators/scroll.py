@@ -209,6 +209,7 @@ def run_sliced_export(
     byte-identical to the sequential form."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
     from pyspark.sql import functions as F
 
     if "slice" in body:
@@ -227,8 +228,15 @@ def run_sliced_export(
             _schema=schema,
         )
 
+    # one wrapper per slice: each pool task gets its own copy of the
+    # caller's job group and local properties
+    spark = df.sparkSession
     with ThreadPoolExecutor(max_workers=min(n, 8)) as pool:
-        parts = list(pool.map(one, range(n)))
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(one), i)
+            for i in range(n)
+        ]
+        parts = [f.result() for f in futs]
     out = None
     for i, part in enumerate(parts):
         if part is None:

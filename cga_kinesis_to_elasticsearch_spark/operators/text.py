@@ -786,14 +786,17 @@ def unigram_logprob(
     # the input's optimizer size estimate — a driver-side plan stat,
     # no job — so the shape adapts to scale instead of being tuned to
     # either end (results are identical either way; the fold order is
-    # unaffected).
+    # unaffected). An input the optimizer cannot size (an RDD-backed or
+    # otherwise stats-less derived frame) reports defaultSizeInBytes,
+    # i.e. ~Long.MaxValue: estimates >= 2^60 count as unknown and keep
+    # the lineage form, like a failed stats call.
     try:
         plan_bytes = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:  # stats unavailable -> keep the lineage form
         plan_bytes = 0
-    if plan_bytes >= TF_CHECKPOINT_MIN_BYTES:
+    if TF_CHECKPOINT_MIN_BYTES <= plan_bytes < 1 << 60:
         tf = tf.localCheckpoint()
     vocab = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
     total = vocab.select(F.sum("cnt").alias("total_tokens"))

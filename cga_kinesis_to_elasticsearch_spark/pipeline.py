@@ -49,7 +49,6 @@ class PipelineConfig:
 
     allowed_origins: list[str] = field(default_factory=lambda: ["env1", "env2"])
     enable_disabled_routes: bool = False
-    days_to_keep: int = 3  # DAYS_TO_KEEP, main.go:553
     # Composable document-level enrichments applied AFTER the parity
     # columns are final (each takes and returns the documents frame) —
     # how UA classification (operators/useragent.py over
@@ -104,11 +103,6 @@ def run_pipeline(
             (f"parsed_{p.lower()}", p, F.col("grok_pattern") == p)
             for p in patterns_in_use
         ],
-        # conditions are fully determined by the pattern list (already
-        # in the memo signature), so a constant key is sound: lets
-        # grok_parse_many reuse the built expression trees instead of
-        # reconstructing ~hundreds of py4j expressions per micro-batch
-        memo_condition_key="grok_pattern_eq",
     )
 
     # F3: identifiability — app_id from the envelope, else the

@@ -210,15 +210,20 @@ def _heavy_hitters_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from ..operators.heavyhitters import exact_counts, mg_merge
 
     ev = _t(spark, sf_dir, "events")
     with ThreadPoolExecutor(2) as ex:
-        fa = ex.submit(
-            exact_counts, ev.filter(F.col("event_id") % 2 == 0), "user_id", _HH_K
-        )
-        fb = ex.submit(
-            exact_counts, ev.filter(F.col("event_id") % 2 == 1), "user_id", _HH_K
+        fa, fb = (
+            ex.submit(
+                inheritable_thread_target(spark)(exact_counts),
+                ev.filter(F.col("event_id") % 2 == parity),
+                "user_id",
+                _HH_K,
+            )
+            for parity in (0, 1)
         )
         a, b = fa.result(), fb.result()
     return mg_merge(a, b, _HH_K)

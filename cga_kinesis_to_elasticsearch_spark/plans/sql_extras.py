@@ -1030,10 +1030,15 @@ def build_bucketed_tables(
     # phases overlap instead of serializing
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     with ThreadPoolExecutor(2) as ex:
         futs = [
-            ex.submit(_write, t_ord, ord_df, "o_orderkey"),
-            ex.submit(_write, t_li, li_df, "l_orderkey"),
+            ex.submit(inheritable_thread_target(spark)(_write), *args)
+            for args in (
+                (t_ord, ord_df, "o_orderkey"),
+                (t_li, li_df, "l_orderkey"),
+            )
         ]
         for f in futs:
             f.result()

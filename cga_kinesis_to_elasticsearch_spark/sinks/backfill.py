@@ -57,9 +57,9 @@ def backfill(
     """Recompute documents for ``records`` and swap the touched index
     partitions into ``data_root`` (the sink's ``data/`` directory).
 
-    Deployments streaming with the cross-batch dedup index MUST pass
-    the same ``dedup_index_path``/``dedup_text_col`` here: the hook
-    re-applies the index so recomputed partitions keep the stream's
+    Deployments streaming with the cross-batch dedup index (a
+    ``dedup_against_index`` before_write stage) MUST pass its index
+    path and text column here: the backfill re-applies the index so recomputed partitions keep the stream's
     dedup decisions (first-id semantics make the re-application
     reproduce the original survivors) and content first seen by the
     backfill gets registered. Omitting it on such a deployment would

@@ -30,6 +30,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..pipeline import PipelineConfig, run_pipeline
@@ -136,73 +137,31 @@ class StreamConfig:
     # "arrow" when the optional spark-protobuf module is absent. A
     # callable is used as-is.
     decoder: Callable[[DataFrame], DataFrame] | str | None = None
-    # Continuous-aggregate maintenance (sinks/rollup.py): after each
-    # batch commits, recompute the rollup for ONLY the index partitions
-    # the batch touched. Off unless both are set.
-    rollup_path: str = ""
-    rollup_aggregate: Callable[[DataFrame], DataFrame] | None = None
-    # Mergeable-sketch maintenance (sinks/sketchmaint.py): per batch,
-    # union the batch's per-index HLL key sketches into stored per-index
-    # sketches — distinct counts kept fresh with NO fact rescans, and
-    # idempotent under at-least-once replay (HLL set semantics). Off
-    # unless both are set.
-    sketch_path: str = ""
-    sketch_key_col: str = ""
-    # Heavy-hitters maintenance (sinks/hhmaint.py): per batch, merge
-    # the batch's key frequencies into a stored k-entry Misra-Gries
-    # summary — the stream's dominant keys, kept fresh with no fact
-    # rescans. Additive merge => at-least-once replays double-count
-    # (same caveat as rollup counters). Off unless both are set.
-    hh_path: str = ""
-    hh_key_col: str = ""
-    hh_k: int = 100
-    # Latest-state upsert table (sinks/upsert.py): per batch, merge the
-    # batch's documents into a keyed current-state table (max-seq wins,
-    # replay/out-of-order safe) — "the newest document per app/route",
-    # maintained incrementally. Off unless path and key are set.
-    upsert_path: str = ""
-    upsert_key_col: str = ""
-    upsert_seq_col: str = "timestamp"
-    # Incremental full-text index (sinks/textindex.py): per batch,
-    # merge the batch documents' postings into the persisted inverted
-    # index — the stream becomes BM25/phrase-searchable as it lands,
-    # the reference's Elasticsearch promise served by the engine
-    # itself. text_index_col names the document text field to index —
-    # nested paths work plainly ("parsed_generic.log_event"); quote
-    # literal-dot column names with backticks ("`@cf.app`"). Off
-    # unless both are set.
-    text_index_path: str = ""
-    text_index_col: str = ""
-    # Per-batch data-quality report (operators/expectations.py): after
-    # the sink write, evaluate the suite against the batch's documents
-    # and write (expectation, metric, threshold, passed) rows into a
-    # batch_id=<n> partition of dq_path (overwritten on at-least-once
-    # replay, so re-delivered batches leave no duplicate rows) —
-    # constraint drift becomes a queryable table.
-    # Row-level constraints only (FK needs a second table; run those
-    # against the SINK with the standalone operator). Off unless both
-    # are set.
-    dq_path: str = ""
-    dq_specs: "list | None" = None
-    # Cross-batch content dedup (sinks/dedupindex.py): before the sink
-    # write, drop documents whose content hash was already indexed by
-    # ANY earlier batch; first-id semantics keep replays idempotent.
-    # Off unless both are set. dedup_text_col is a column of the FINAL
-    # document (a parsed field like "parsed_generic.log_event" or a
-    # scalar like "file_path" — the nested log_message struct is
-    # dropped before the hook runs); dedup_index_path stores the
-    # (hash, first_id) table.
-    dedup_index_path: str = ""
-    dedup_text_col: str = ""
-    # Cross-batch NEAR-dup (sinks/neardupindex.py): same hook shape as
-    # the exact index but keyed on MinHash LSH bands — drops documents
-    # near-duplicating any earlier batch's survivor. Runs AFTER the
-    # exact hook when both are on (exact is cheaper; fuzzy only sees
-    # content-distinct docs).
-    neardup_index_path: str = ""
-    neardup_text_col: str = ""
-    neardup_n_hashes: int = 4
-    neardup_band_size: int = 2
+    # The micro-batch's optional work, as two ordered stage tuples that
+    # the runner in run_stream applies around the sink write (the same
+    # shape as PipelineConfig.post_stages). The runner owns caching:
+    # every frame a stage receives is persisted by the runner and
+    # released when the batch ends; stages persist nothing themselves.
+    #
+    # before_write: ``stage(docs) -> docs``, in order, before the
+    # touched-index count and the sink write — filters such as the
+    # cross-batch exact and near-duplicate indices
+    # (sinks/dedupindex.dedup_against_index, then
+    # sinks/neardupindex.neardup_against_index; exact first, it is the
+    # cheaper one). ``docs`` are the final documents (log_message and
+    # arrival_ts dropped).
+    before_write: tuple[Callable[[DataFrame], DataFrame], ...] = ()
+    # after_write: ``stage(docs, touched, batch_id) -> None``, in order,
+    # once the batch is written: ``docs`` is the cached written frame,
+    # ``touched`` the es_index names it wrote to (known from the count
+    # the runner already runs, so a stage that only needs the indices
+    # adds no job) and ``batch_id`` the micro-batch id (for per-batch
+    # partitions that an at-least-once replay overwrites). Maintained
+    # state goes here: sketches (sinks/sketchmaint), heavy hitters
+    # (sinks/hhmaint), the upsert table (sinks/upsert), the text index
+    # (sinks/textindex), data-quality reports
+    # (operators/expectations) and rollups (sinks/rollup).
+    after_write: tuple[Callable[[DataFrame, list, int], None], ...] = ()
 
 
 def _resolve_decoder(spark: SparkSession, decoder) -> Callable:
@@ -247,6 +206,10 @@ def run_stream(
     batch_counter = {"n": 0}
 
     def process_batch(raw: DataFrame, batch_id: int) -> None:
+        # The runner owns every cache of the batch: the decoded records
+        # and each before_write stage's input and output, all released
+        # when the batch ends.
+        #
         # Decode once per batch; the good/poison split and the poison
         # counter read the decoded frame, so cache it (bounded by
         # trigger x arrival rate; availableNow backfills are capped by
@@ -256,147 +219,55 @@ def run_stream(
         # per-batch query, and Observation.get throws (pinned by
         # TestErrorReplay, which runs an all-poison batch).
         records = decode(raw).persist()
+        held = [records]
         try:
             poison = records.filter(F.col("decode_error"))
             good = records.filter(~F.col("decode_error")).drop(
                 "decode_error", "data"
             )
-            dim = dim_provider(spark)
-            docs = run_pipeline(good, dim, cfg.pipeline)
-            # persist BEFORE the dedup hook: the index update is its own
-            # action, and the survivors filter re-reads the cached
-            # pipeline output instead of re-running grok/enrichment
-            cached = docs.drop("log_message", "arrival_ts").persist()
-            docs = cached
-            if cfg.dedup_index_path and cfg.dedup_text_col:
-                from ..sinks.dedupindex import dedup_against_index
-
-                # persist the survivors too: the index join otherwise
-                # re-executes for each downstream action (touched-index
-                # collect, sink write, sent count)
-                docs = dedup_against_index(
-                    spark,
-                    cached,
-                    cfg.dedup_index_path,
-                    cfg.dedup_text_col,
-                    "doc_id",
-                ).persist()
-            if cfg.neardup_index_path and cfg.neardup_text_col:
-                from ..sinks.neardupindex import neardup_against_index
-
-                docs = neardup_against_index(
-                    spark,
+            docs = run_pipeline(good, dim_provider(spark), cfg.pipeline)
+            docs = docs.drop("log_message", "arrival_ts")
+            # cache each stage's input and the last output: a filter
+            # stage's index update is its own action, and the next
+            # action re-reads the cache instead of re-running
+            # grok/enrichment or the index join
+            for stage in cfg.before_write:
+                held.append(docs.persist())
+                docs = stage(docs)
+            held.append(docs.persist())
+            # ONE aggregation serves the touched-index set, the sent
+            # counter and the sink's file fan-out
+            idx_counts = (
+                docs.groupBy("es_index")
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .collect()
+            )
+            touched = [r["es_index"] for r in idx_counts]
+            sink.ensure_indices(touched)
+            # the poison count only reads the populated records cache —
+            # submit it concurrently so it back-fills the sink write's
+            # task tail (guide §2.6) instead of running as its own
+            # serial job afterwards; the wrapper hands this thread's job
+            # group and local properties to the pool thread
+            count_poison = inheritable_thread_target(spark)(poison.count)
+            with ThreadPoolExecutor(max_workers=1) as pool:
+                poison_fut = pool.submit(count_poison)
+                sink.write(
                     docs,
-                    cfg.neardup_index_path,
-                    cfg.neardup_text_col,
-                    "doc_id",
-                    n_hashes=cfg.neardup_n_hashes,
-                    band_size=cfg.neardup_band_size,
-                ).persist()
-            try:
-                # ONE aggregation serves the touched-index set AND the
-                # sent counter (previously a distinct.collect plus a
-                # separate count — one extra job per micro-batch); the
-                # per-index counts are also the shared small input for
-                # the maintained-state hooks below
-                idx_counts = (
-                    docs.groupBy("es_index")
-                    .agg(F.count(F.lit(1)).alias("__n"))
-                    .collect()
+                    max_rows_per_index=max(
+                        (r["__n"] for r in idx_counts), default=0
+                    ),
                 )
-                touched = [r["es_index"] for r in idx_counts]
-                sink.ensure_indices(touched)
-                # the poison count only reads the populated records
-                # cache — submit it concurrently so it back-fills the
-                # sink write's task tail (guide §2.6) instead of
-                # running as its own serial job afterwards
-                with ThreadPoolExecutor(max_workers=1) as pool:
-                    poison_fut = pool.submit(poison.count)
-                    # the idx_counts aggregation already knows the
-                    # batch's largest index — let the sink scale its
-                    # file fan-out to it (small batch -> 1 file/index)
-                    sink.write(
-                        docs,
-                        max_rows_per_index=max(
-                            (r["__n"] for r in idx_counts), default=0
-                        ),
-                    )
-                    n_poison = poison_fut.result()
-                m.sent_count += sum(r["__n"] for r in idx_counts)
-                if cfg.sketch_path and cfg.sketch_key_col:
-                    from ..sinks.sketchmaint import refresh_day_sketches
-
-                    refresh_day_sketches(
-                        spark,
-                        docs,
-                        cfg.sketch_path,
-                        day_col="es_index",
-                        key_col=cfg.sketch_key_col,
-                    )
-                if cfg.hh_path and cfg.hh_key_col:
-                    from ..sinks.hhmaint import refresh_heavy_hitters
-
-                    refresh_heavy_hitters(
-                        spark,
-                        docs,
-                        cfg.hh_path,
-                        key_col=cfg.hh_key_col,
-                        k=cfg.hh_k,
-                    )
-                if cfg.upsert_path and cfg.upsert_key_col:
-                    from ..sinks.upsert import apply_upserts
-
-                    apply_upserts(
-                        spark,
-                        docs,
-                        cfg.upsert_path,
-                        key_col=cfg.upsert_key_col,
-                        seq_col=cfg.upsert_seq_col,
-                        tiebreak_col="doc_id",
-                    )
-                if cfg.text_index_path and cfg.text_index_col:
-                    from ..sinks.textindex import append_to_text_index
-
-                    append_to_text_index(
-                        spark,
-                        docs.select(
-                            "doc_id",
-                            F.col(cfg.text_index_col).alias("text"),
-                        ).filter(F.col("text").isNotNull()),
-                        cfg.text_index_path,
-                        text_col="text",
-                        id_col="doc_id",
-                    )
-                if cfg.dq_path and cfg.dq_specs:
-                    from ..operators.expectations import check_expectations
-
-                    # one hive-partition dir per batch_id, overwritten in
-                    # place: an at-least-once replay rewrites its own
-                    # partition instead of appending duplicate rows
-                    report = check_expectations(docs, cfg.dq_specs)
-                    report.coalesce(1).write.mode("overwrite").parquet(
-                        f"{cfg.dq_path}/batch_id={int(batch_id)}"
-                    )
-            finally:
-                if docs is not cached:
-                    docs.unpersist()
-                cached.unpersist()
-            if cfg.rollup_path and cfg.rollup_aggregate is not None:
-                from ..sinks.rollup import refresh_rollup
-
-                refresh_rollup(
-                    spark,
-                    sink.root / "data",
-                    cfg.rollup_path,
-                    touched,
-                    cfg.rollup_aggregate,
-                    date_col="es_index",
-                )
+                n_poison = poison_fut.result()
+            m.sent_count += sum(r["__n"] for r in idx_counts)
+            for stage in cfg.after_write:
+                stage(docs, touched, batch_id)
             if n_poison:
                 sink.write_errors(poison.drop("decode_error"), batch_id)
                 m.errors_count += n_poison
         finally:
-            records.unpersist()
+            for df in held:
+                df.unpersist()
         batch_counter["n"] += 1
         if (
             cfg.retention_every_batches

@@ -48,7 +48,7 @@ class TestEngineConfig:
         assert cfg.checkpoint_location == "/ck"
         sc = cfg.stream_config()
         assert sc.checkpoint_location == "/ck"
-        assert sc.pipeline.days_to_keep == 30
+        assert sc.days_to_keep == 30
         assert sc.pipeline.allowed_origins == ["env1", "env2"]
 
 

@@ -373,3 +373,26 @@ class TestUnigramTfGate:
         finally:
             T.TF_CHECKPOINT_MIN_BYTES = old
         assert a == b and len(a) == 50
+
+    def test_unsized_input_keeps_lineage(self, spark, monkeypatch):
+        import cga_kinesis_to_elasticsearch_spark.operators.text as T
+
+        rows = [(i, f"alpha beta w{i % 7} gamma") for i in range(50)]
+        # an RDD-backed frame carries no stats: the optimizer reports
+        # defaultSizeInBytes (~Long.MaxValue), which says nothing about
+        # the input's real size
+        df = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows), "doc_id long, text string"
+        ).filter(F.col("doc_id") >= 0)
+        est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        assert int(est) >= 1 << 60
+        calls = []
+        real = type(df).localCheckpoint
+
+        def spy(self, *a, **k):
+            calls.append(1)
+            return real(self, *a, **k)
+
+        monkeypatch.setattr(type(df), "localCheckpoint", spy)
+        out = T.unigram_logprob(df, "text", "doc_id").collect()
+        assert calls == [] and len(out) == 50

@@ -103,8 +103,15 @@ class TestStreamingDedupHook:
             checkpoint_location=str(tmp_path / "ck"),
             available_now=True,
             pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
-            dedup_index_path=str(tmp_path / "didx"),
-            dedup_text_col="parsed_generic.log_event",
+            before_write=(
+                lambda d: dedup_against_index(
+                    d.sparkSession,
+                    d,
+                    str(tmp_path / "didx"),
+                    "parsed_generic.log_event",
+                    "doc_id",
+                ),
+            ),
         )
         query, m = run_stream(
             spark,

@@ -106,16 +106,25 @@ class TestStreamingDQHook:
         dim = flatten_dimensions(*synthesize_cf_dimensions(spark)).cache()
         sink = ParquetIndexSink(tmp_path / "sink")
         dq = tmp_path / "dq"
+        specs = [
+            E.not_null("doc_id"),
+            E.not_null("es_index"),
+            E.matches("es_index", r"^gorouter-\d{4}"),
+        ]
+
+        def write_report(d, touched, batch_id):
+            # one hive-partition dir per batch_id, overwritten in place:
+            # an at-least-once replay rewrites its own partition instead
+            # of appending duplicate rows
+            E.check_expectations(d, specs).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(f"{dq}/batch_id={int(batch_id)}")
+
         cfg = StreamConfig(
             checkpoint_location=str(tmp_path / "ck"),
             available_now=True,
             pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
-            dq_path=str(dq),
-            dq_specs=[
-                E.not_null("doc_id"),
-                E.not_null("es_index"),
-                E.matches("es_index", r"^gorouter-\d{4}"),
-            ],
+            after_write=(write_report,),
         )
         query, _ = run_stream(
             spark,

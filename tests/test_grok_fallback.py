@@ -83,43 +83,3 @@ class TestAutoFallback:
 
         jvm = grok_parse_many(grok, lines, "line", [("g", "%{WORD:w}", None)])
         assert py.schema == jvm.schema
-
-
-class TestParseManyMemo:
-    """grok_parse_many's opt-in expression memo (r10) must return
-    byte-identical results to a fresh build and key strictly on the
-    pattern signature."""
-
-    def test_memoized_equals_fresh(self, spark, grok):
-        from cga_kinesis_to_elasticsearch_spark.grok import spark as GS
-
-        lines = spark.createDataFrame(
-            [("a=1 b=x",), ("junk",), ("a=7 b=y",)], "line string"
-        )
-        specs = [("g", "a=%{NUMBER:a:int} b=%{WORD:b}", None)]
-        GS._PARSE_MANY_MEMO.clear()
-        fresh = {tuple(r) for r in GS.grok_parse_many(
-            grok, lines, "line", specs).select("g.*").collect()}
-        # populate + hit
-        GS.grok_parse_many(grok, lines, "line", specs, memo_condition_key="t")
-        assert any(k[1] == "t" for k in GS._PARSE_MANY_MEMO)
-        hit = {tuple(r) for r in GS.grok_parse_many(
-            grok, lines, "line", specs, memo_condition_key="t"
-        ).select("g.*").collect()}
-        assert hit == fresh
-
-    def test_different_patterns_do_not_collide(self, spark, grok):
-        from cga_kinesis_to_elasticsearch_spark.grok import spark as GS
-
-        lines = spark.createDataFrame([("a=1 b=x",)], "line string")
-        GS._PARSE_MANY_MEMO.clear()
-        one = GS.grok_parse_many(
-            grok, lines, "line",
-            [("g", "a=%{NUMBER:a:int}", None)], memo_condition_key="t",
-        )
-        two = GS.grok_parse_many(
-            grok, lines, "line",
-            [("g", "b=%{WORD:b}", None)], memo_condition_key="t",
-        )
-        assert one.schema != two.schema  # second call built, not reused
-        assert two.collect()[0]["g"]["b"] == "x"

@@ -149,9 +149,11 @@ class TestStreamingHHHook:
             checkpoint_location=str(tmp_path / "ck"),
             available_now=True,
             pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
-            hh_path=str(hh),
-            hh_key_col="@cf.app_id",
-            hh_k=k,
+            after_write=(
+                lambda d, touched, batch_id: refresh_heavy_hitters(
+                    d.sparkSession, d, str(hh), key_col="@cf.app_id", k=k
+                ),
+            ),
         )
         query, _ = run_stream(
             spark,

@@ -37,6 +37,17 @@ def _ids(df, dsl):
 
 
 class TestQueryStringLowering:
+    def test_lower_case_operators_are_terms(self, docs):
+        # ES query_string: only upper-case AND/OR/NOT are operators
+        dsl = query_string_to_dsl(
+            {"query": "text:(not OR nothing)", "default_field": "text"}
+        )
+        assert _ids(docs, dsl) == [4]
+        dsl = query_string_to_dsl(
+            {"query": "quick and lazy", "default_field": "text"}
+        )
+        assert _ids(docs, dsl) == [1, 2, 3]
+
     def test_field_terms_and_bools(self, docs):
         dsl = query_string_to_dsl(
             {"query": "lang:en AND (source:web OR source:wiki)",

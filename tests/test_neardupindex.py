@@ -106,8 +106,17 @@ class TestStreamingNearDupHook:
             checkpoint_location=str(tmp_path / "ck"),
             available_now=True,
             pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
-            neardup_index_path=str(tmp_path / "ndidx"),
-            neardup_text_col="parsed_generic.log_event",
+            before_write=(
+                lambda d: neardup_against_index(
+                    d.sparkSession,
+                    d,
+                    str(tmp_path / "ndidx"),
+                    "parsed_generic.log_event",
+                    "doc_id",
+                    n_hashes=4,
+                    band_size=2,
+                ),
+            ),
         )
         query, m = run_stream(
             spark,

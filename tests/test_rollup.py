@@ -137,8 +137,16 @@ class TestStreamingRollupHook:
             checkpoint_location=str(tmp_path / "ck"),
             available_now=True,
             pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
-            rollup_path=str(rollup),
-            rollup_aggregate=agg,
+            after_write=(
+                lambda d, touched, batch_id: refresh_rollup(
+                    d.sparkSession,
+                    sink.root / "data",
+                    str(rollup),
+                    touched,
+                    agg,
+                    date_col="es_index",
+                ),
+            ),
         )
         query, _ = run_stream(
             spark, read_raw_record_stream(spark, str(src)), lambda s: dim,

@@ -136,8 +136,15 @@ class TestStreamingSketchHook:
             checkpoint_location=str(tmp_path / "ck"),
             available_now=True,
             pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
-            sketch_path=str(sketches),
-            sketch_key_col="@cf.app_id",
+            after_write=(
+                lambda d, touched, batch_id: refresh_day_sketches(
+                    d.sparkSession,
+                    d,
+                    str(sketches),
+                    day_col="es_index",
+                    key_col="@cf.app_id",
+                ),
+            ),
         )
         query, _ = run_stream(
             spark,

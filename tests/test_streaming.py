@@ -86,6 +86,36 @@ def streamed(spark, dim, fixture_dir, tmp_path_factory):
     return sink, metrics, cfg, str(ck), fixture_dir
 
 
+class TestJobGroups:
+    def test_every_batch_job_carries_the_stream_job_group(
+        self, spark, dim, fixture_dir, tmp_path
+    ):
+        # the stream runs each batch under its run id's job group; the
+        # poison count runs on a pool thread and must inherit it, or
+        # cancelling the query cannot reach it and it goes unattributed
+        tracker = spark.sparkContext.statusTracker()
+        ungrouped_before = set(tracker.getJobIdsForGroup())
+        cfg = StreamConfig(
+            checkpoint_location=str(tmp_path / "ck"),
+            available_now=True,
+            pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
+        )
+        query, metrics = run_stream(
+            spark,
+            read_raw_record_stream(spark, fixture_dir),
+            lambda s: dim,
+            ParquetIndexSink(tmp_path / "sink"),
+            cfg,
+        )
+        drain(query)
+        # the status store fills from the listener bus asynchronously
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        assert metrics.errors_count == N_POISON  # the poison count ran
+        assert tracker.getJobIdsForGroup(str(query.runId))
+        # only ids beyond the snapshot: old jobs may be evicted meanwhile
+        assert set(tracker.getJobIdsForGroup()) - ungrouped_before == set()
+
+
 class TestRoundTrip:
     def test_encode_decode_lossless(self, spark, records):
         back = decode_records(encode_records(records))

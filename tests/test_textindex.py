@@ -357,6 +357,7 @@ class TestStreamingIndexHook:
         from cga_kinesis_to_elasticsearch_spark.pipeline import PipelineConfig
         from cga_kinesis_to_elasticsearch_spark.sinks.bulk import ParquetIndexSink
         from cga_kinesis_to_elasticsearch_spark.sinks.textindex import (
+            append_to_text_index,
             search_and,
         )
         from cga_kinesis_to_elasticsearch_spark.sources.envelopes import (
@@ -384,8 +385,18 @@ class TestStreamingIndexHook:
             checkpoint_location=str(tmp_path / "ck"),
             available_now=True,
             pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
-            text_index_path=str(idx),
-            text_index_col="parsed_generic.log_event",
+            after_write=(
+                lambda d, touched, batch_id: append_to_text_index(
+                    d.sparkSession,
+                    d.select(
+                        "doc_id",
+                        F.col("parsed_generic.log_event").alias("text"),
+                    ).filter(F.col("text").isNotNull()),
+                    str(idx),
+                    text_col="text",
+                    id_col="doc_id",
+                ),
+            ),
         )
         query, _ = run_stream(
             spark,

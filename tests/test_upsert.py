@@ -188,8 +188,16 @@ class TestStreamingUpsertHook:
             checkpoint_location=str(tmp_path / "ck"),
             available_now=True,
             pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
-            upsert_path=str(state),
-            upsert_key_col="@cf.app_id",
+            after_write=(
+                lambda d, touched, batch_id: apply_upserts(
+                    d.sparkSession,
+                    d,
+                    str(state),
+                    key_col="@cf.app_id",
+                    seq_col="timestamp",
+                    tiebreak_col="doc_id",
+                ),
+            ),
         )
         query, _ = run_stream(
             spark,

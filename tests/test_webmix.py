@@ -347,6 +347,18 @@ class TestSpanDedup:
         assert got[1]["n_removed"] == 4
         assert got[1]["retained_md5"] == self._md5("")
 
+    @pytest.mark.parametrize("bad_id", [2**32, -1])
+    def test_id_outside_key_range_fails_loudly(self, spark, bad_id):
+        # an id outside [0, 2^32) would wrap the (id * 2^31 + pos) key
+        # and silently reorder ownership; the staged checkpoint raises
+        with pytest.raises(Exception, match=r"outside \[0, 2\^32\)"):
+            self._run(spark, [(0, "p q r s"), (bad_id, "p q r s")], w=3)
+
+    def test_largest_id_in_range_accepted(self, spark):
+        got = self._run(spark, [(0, "p q r s"), (2**32 - 1, "p q r s")], w=3)
+        assert got[0]["n_removed"] == 0
+        assert got[2**32 - 1]["n_removed"] == 4
+
     def test_normalization_feeds_windows(self, spark):
         # punctuation/case differences must not defeat the exact match
         got = self._run(
