@@ -23,9 +23,17 @@ from pathlib import Path
 
 from pyspark.sql import Column, functions as F
 
-__all__ = ["DATE_SUFFIX_RE", "retention_keep", "cutoff_date_str", "drop_old_partitions"]
+__all__ = [
+    "DATE_SUFFIX_RE",
+    "retention_keep",
+    "index_kept",
+    "cutoff_date_str",
+    "drop_old_partitions",
+]
 
 DATE_SUFFIX_RE = r"^\d{4}-\d{2}-\d{2}$"  # main.go:214
+# ASCII: Go's and Java's \d match 0-9 only, Python's any Unicode digit
+_DATE_SUFFIX = re.compile(DATE_SUFFIX_RE, re.ASCII)
 
 
 def cutoff_date_str(days_to_keep: int, today: dt.date | None = None) -> str:
@@ -46,6 +54,16 @@ def retention_keep(index_name: Column, cutoff: str) -> Column:
     )
 
 
+def index_kept(name: str, cutoff: str) -> bool:
+    """Python form of :func:`retention_keep`, for index listings."""
+    suffix = name[-10:]
+    return name == ".kibana" or (
+        len(name) >= 10
+        and _DATE_SUFFIX.match(suffix) is not None
+        and suffix >= cutoff
+    )
+
+
 def drop_old_partitions(
     sink_root: str | Path, days_to_keep: int, today: dt.date | None = None
 ) -> list[str]:
@@ -55,17 +73,11 @@ def drop_old_partitions(
     equivalent issues DeleteIndex calls instead (client.go:1543)."""
     root = Path(sink_root)
     cutoff = cutoff_date_str(days_to_keep, today)
-    date_re = re.compile(DATE_SUFFIX_RE)
     dropped: list[str] = []
     if not root.exists():
         return dropped
     for child in sorted(root.iterdir()):
-        name = child.name
-        if not child.is_dir() or name == ".kibana":
-            continue
-        suffix = name[-10:]
-        keep = len(name) >= 10 and date_re.match(suffix) and suffix >= cutoff
-        if not keep:
+        if child.is_dir() and not index_kept(child.name, cutoff):
             shutil.rmtree(child)
-            dropped.append(name)
+            dropped.append(child.name)
     return dropped

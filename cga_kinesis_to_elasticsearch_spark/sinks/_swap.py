@@ -1,5 +1,8 @@
-"""Crash-safe partition-directory swap protocol shared by the
-incremental maintainers (rollup.py, sketchmaint.py).
+"""Crash-safe partition-directory swap protocol shared by every
+maintained-state sink. :func:`write_swapped` (one directory) and
+:func:`write_partitions_swapped` (one ``partitionBy`` job, many
+directories) are the only ways into it: no other sink module stages a
+``.tmp-`` dir or calls the swap steps itself.
 
 Protocol per partition ``<part>`` (e.g. ``day=2024-01-03``) under a
 root directory:
@@ -14,7 +17,8 @@ next run can classify and repair via :func:`recover_and_sweep`:
 
 - ``.tmp-<part>`` present: the write never became visible. Safe to
   drop — foreachBatch sinks run at-least-once, so the batch that
-  produced it is replayed against the last durable state.
+  produced it is replayed against the last durable state. The shared
+  partitioned staging dir (``.tmp-rewrite``) is swept the same way.
 - ``.old-<part>`` present, ``<part>`` present: crash between steps
   3 and 4 — the old dir is superseded; drop it.
 - ``.old-<part>`` present, ``<part>`` missing: crash between steps
@@ -33,16 +37,23 @@ import shutil
 from pathlib import Path
 from urllib.parse import unquote
 
+from pyspark.sql import DataFrame
+
 __all__ = [
     "recover_and_sweep",
     "swap_in",
     "part_paths",
     "decode_part_name",
     "promote_staged",
+    "write_swapped",
+    "write_partitions_swapped",
 ]
 
 _TMP = ".tmp-"
 _OLD = ".old-"
+# the one staging dir of a partitioned write, under the table root;
+# the _TMP prefix makes recover_and_sweep clear it after a crash
+_STAGING = f"{_TMP}rewrite"
 
 
 def part_paths(root: Path, part: str) -> tuple[Path, Path, Path]:
@@ -86,57 +97,62 @@ def promote_staged(
     root: Path,
     tmp_root: Path,
     part_col: str,
-    expected: dict[str, bool],
-) -> None:
+    expected: dict[str | None, bool] | None = None,
+) -> list[str]:
     """Promote every staged partition dir under ``tmp_root`` into
-    ``root`` via the swap protocol, matching touched partition VALUES
-    against the dir names Spark actually wrote — reconstructing
-    ``f"{col}={value}"`` is unsafe because ``partitionBy`` escapes
-    special characters.
+    ``root`` via the swap protocol; returns the promoted dir names.
+    Touched partition VALUES are matched against the dir names Spark
+    actually wrote — reconstructing ``f"{col}={value}"`` is unsafe
+    because ``partitionBy`` escapes special characters.
 
-    ``expected`` maps each touched partition's raw string value to
-    whether the rewrite may legitimately have staged NOTHING for it
-    (True = every row of the partition was deleted, swap in an empty
-    dir). Any other mismatch — a touched partition with surviving rows
-    but no staged dir, or a staged dir for an un-touched value — raises
-    instead of silently swapping in an empty (data-losing) partition."""
+    ``expected`` (None = every staged dir) maps each touched
+    partition's raw string value to whether the rewrite may
+    legitimately have staged NOTHING for it (True = every row of the
+    partition was deleted, swap in an empty dir). Any other mismatch —
+    a touched partition with surviving rows but no staged dir, or a
+    staged dir for an un-touched value — raises instead of silently
+    swapping in an empty (data-losing) partition."""
     prefix = f"{part_col}="
     staged: dict[str | None, str] = {}
-    for p in tmp_root.iterdir():
+    for p in sorted(tmp_root.iterdir()):
         if p.is_dir() and p.name.startswith(prefix):
             staged[decode_part_name(p.name)[1]] = p.name
+    if expected is None:
+        expected = dict.fromkeys(staged, False)
     orig: dict[str | None, str] = {}
     for p in root.iterdir():
         if p.is_dir() and p.name.startswith(prefix):
             orig[decode_part_name(p.name)[1]] = p.name
+    promoted: list[str] = []
     for val, may_be_empty in expected.items():
         name = staged.pop(val, None)
-        if name is not None:
-            _, tmp, _ = part_paths(root, name)
-            (tmp_root / name).rename(tmp)
-            swap_in(root, name)
-            continue
-        if not may_be_empty:
+        if name is None and not may_be_empty:
             raise RuntimeError(
                 "partition rewrite staged no directory for touched "
                 f"partition {part_col}={val!r} which still has "
                 "surviving rows — refusing to swap in an empty dir"
             )
-        name = orig.get(val)
         if name is None:
-            raise RuntimeError(
-                "fully-deleted touched partition "
-                f"{part_col}={val!r} has no original directory under "
-                f"{root} — partition listing out of sync with the scan"
-            )
-        _, tmp, _ = part_paths(root, name)
-        tmp.mkdir()
+            name = orig.get(val)
+            if name is None:
+                raise RuntimeError(
+                    "fully-deleted touched partition "
+                    f"{part_col}={val!r} has no original directory under "
+                    f"{root} — partition listing out of sync with the scan"
+                )
+            _, tmp, _ = part_paths(root, name)
+            tmp.mkdir()
+        else:
+            _, tmp, _ = part_paths(root, name)
+            (tmp_root / name).rename(tmp)
         swap_in(root, name)
+        promoted.append(name)
     if staged:
         raise RuntimeError(
             "partition rewrite staged directories for values the "
             f"match scan never touched: {sorted(staged.values())}"
         )
+    return promoted
 
 
 def swap_in(root: Path, part: str) -> None:
@@ -151,3 +167,38 @@ def swap_in(root: Path, part: str) -> None:
     tmp.rename(final)
     if old.exists():
         shutil.rmtree(old)
+
+
+def write_swapped(df: DataFrame, root: Path, part: str) -> Path:
+    """Steps 1-4 for one directory: ONE Spark job writes ``df`` to
+    ``.tmp-<part>``, which is then swapped in as ``<part>``. Commit
+    markers are dropped, so the dir holds data files only, like a
+    ``partitionBy`` partition. Returns the final path."""
+    final, tmp, _ = part_paths(root, part)
+    shutil.rmtree(tmp, ignore_errors=True)
+    df.write.parquet(str(tmp))
+    for marker in tmp.glob("_*"):
+        marker.unlink()
+    swap_in(root, part)
+    return final
+
+
+def write_partitions_swapped(
+    df: DataFrame,
+    root: Path,
+    part_col: str,
+    expected: dict[str | None, bool] | None = None,
+) -> list[str]:
+    """Steps 1-4 for many directories: ONE ``partitionBy(part_col)``
+    job writes ``df`` into the staging dir, every staged dir is
+    promoted (:func:`promote_staged`, with its strict check when the
+    caller passes the touched values as ``expected``), then the
+    staging dir is removed. Returns the promoted dir names. A crash
+    anywhere leaves only ``.tmp-`` dirs or a state ``swap_in``'s
+    deterministic names let :func:`recover_and_sweep` repair."""
+    staging = root / _STAGING
+    shutil.rmtree(staging, ignore_errors=True)
+    df.write.partitionBy(part_col).parquet(str(staging))
+    promoted = promote_staged(root, staging, part_col, expected)
+    shutil.rmtree(staging, ignore_errors=True)
+    return promoted

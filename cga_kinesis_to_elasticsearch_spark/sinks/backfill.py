@@ -11,9 +11,10 @@ stored raw records, written partition-atomically.
 
 Shape chosen for scale:
 
-1. ONE distributed job writes the recomputed documents
-   partitioned-by-index into a staging directory (same no-shuffle
-   fan-out as the live sink write);
+1. the stream's ``before_write`` stages (the cross-batch dedup
+   filters) run through the stream's own stage runner, then ONE
+   distributed job writes the documents partitioned-by-index into a
+   staging directory (same no-shuffle fan-out as the live sink write);
 2. each staged ``es_index=...`` partition is promoted into the sink
    via the `_swap.py` deterministic-name protocol — readers see the
    old or the new partition, never a mix, and a crash at any rename
@@ -26,14 +27,15 @@ are not produced by the filtered record set.
 
 from __future__ import annotations
 
-import shutil
+from collections.abc import Callable
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..pipeline import PipelineConfig, run_pipeline
-from ._swap import recover_and_sweep, swap_in
+from ..streaming.job import run_before_write
+from ._swap import recover_and_sweep, write_partitions_swapped
 
 __all__ = ["BackfillStats", "backfill"]
 
@@ -51,51 +53,39 @@ def backfill(
     dim: DataFrame,
     data_root: str | Path,
     config: PipelineConfig | None = None,
-    dedup_index_path: str | Path = "",
-    dedup_text_col: str = "",
+    before_write: tuple[Callable[[DataFrame], DataFrame], ...] = (),
 ) -> BackfillStats:
     """Recompute documents for ``records`` and swap the touched index
     partitions into ``data_root`` (the sink's ``data/`` directory).
 
-    Deployments streaming with the cross-batch dedup index (a
-    ``dedup_against_index`` before_write stage) MUST pass its index
-    path and text column here: the backfill re-applies the index so recomputed partitions keep the stream's
-    dedup decisions (first-id semantics make the re-application
-    reproduce the original survivors) and content first seen by the
-    backfill gets registered. Omitting it on such a deployment would
-    resurrect suppressed duplicates in the rewritten partitions."""
+    ``before_write`` takes the stream's ``StreamConfig.before_write``
+    stages and runs them the way the stream does. A deployment that
+    streams with the cross-batch exact or near-dup index filters
+    (``dedup_against_index`` / ``neardup_against_index``) MUST pass the
+    same stages here: first-id semantics make the re-application
+    reproduce the stream's survivors, and content first seen by the
+    backfill gets registered. Omitting them would resurrect suppressed
+    duplicates in the rewritten partitions."""
     root = Path(data_root)
     root.mkdir(parents=True, exist_ok=True)
     recover_and_sweep(root)
-    stats = BackfillStats()
+    before = {p.name for p in root.iterdir()}
     docs = run_pipeline(records, dim, config).drop("log_message", "arrival_ts")
-    cached = None
-    if dedup_index_path and dedup_text_col:
-        from .dedupindex import dedup_against_index
-
-        cached = docs.persist()  # index update + staging write reuse it
-        docs = dedup_against_index(
-            spark, cached, dedup_index_path, dedup_text_col, "doc_id"
+    held: list[DataFrame] = []
+    try:
+        docs = run_before_write(docs, before_write, held)
+        written = write_partitions_swapped(docs, root, "es_index")
+    finally:
+        for df in held:
+            df.unpersist()
+    replaced = len(before.intersection(written))
+    stats = BackfillStats(
+        partitions_replaced=replaced, partitions_added=len(written) - replaced
+    )
+    if written:
+        stats.docs_written = (
+            spark.read.option("basePath", str(root))
+            .parquet(*[str(root / p) for p in written])
+            .count()
         )
-    staging = root / ".tmp-__backfill__"
-    if staging.exists():
-        shutil.rmtree(staging)
-    docs.write.partitionBy("es_index").parquet(str(staging))
-    if cached is not None:
-        cached.unpersist()
-    stats.docs_written = spark.read.parquet(str(staging)).count()
-    for part in sorted(staging.iterdir()):
-        if not part.is_dir() or not part.name.startswith("es_index="):
-            continue
-        existed = (root / part.name).exists()
-        tmp = root / f".tmp-{part.name}"
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        part.rename(tmp)
-        swap_in(root, part.name)
-        if existed:
-            stats.partitions_replaced += 1
-        else:
-            stats.partitions_added += 1
-    shutil.rmtree(staging, ignore_errors=True)
     return stats

@@ -22,11 +22,12 @@ a parquet lake cannot), and ``grok`` processors are rejected (their
 staged projection cannot be made row-conditional); both fail at PLAN
 time.
 
-Scale shape: identical to forget — ONE match-scan job grouped by the
-partition column finds touched partitions (payload columns unread),
-then ONE partition-pruned rewrite job covers every touched partition
-(no shuffle; parallelism tracks input splits), promoted per partition
-through the swap. Untouched partitions are never read twice.
+Scale shape: identical to forget, through the same
+``forget.rewrite_matching_partitions`` — ONE match-scan job grouped by
+the partition column finds touched partitions (payload columns
+unread), then ONE partition-pruned rewrite job covers every touched
+partition (no shuffle; parallelism tracks input splits), promoted per
+partition through the swap. Untouched partitions are never read twice.
 Idempotence differs by design: delete is naturally idempotent;
 update re-applies (ES's update_by_query also re-executes on retry —
 use version-style guards in the processor chain when that matters).
@@ -34,21 +35,14 @@ use version-style guards in the processor chain when that matters).
 
 from __future__ import annotations
 
-import shutil
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.ingest import compile_pipeline
 from ..operators.querydsl import compile_query
-from ._swap import promote_staged, recover_and_sweep
-from .forget import (
-    ForgetStats,
-    forget,
-    raw_partition_values,
-    touched_values_predicate,
-)
+from .forget import ForgetStats, forget, rewrite_matching_partitions
 
 __all__ = ["delete_by_query", "update_by_query", "UpdateStats"]
 
@@ -102,29 +96,9 @@ def update_by_query(
     pred = F.coalesce(
         compile_query(body["query"], id_col=id_col), F.lit(False)
     )
-    root = Path(data_root)
-    stats = UpdateStats()
-    if not root.exists():
-        return stats
-    recover_and_sweep(root)
-    if not any(
-        d.is_dir() and d.name.startswith(partition_prefix)
-        for d in root.iterdir()
-    ):
-        return stats
     part_col = partition_prefix.rstrip("=")
-    # same two-job shape as forget: ONE match-scan grouped by the
-    # partition column, then ONE conditional-projection rewrite over
-    # every touched partition (partition-pruned scan, no shuffle),
-    # promoted per partition through the crash-safe swap
-    # Partition-type inference off for the whole rewrite so collected
-    # partition values are the exact directory strings; promotion then
-    # matches the dir names Spark actually wrote (escaping-safe) and
-    # an update can never legitimately stage nothing for a touched
-    # partition (rows are rewritten, not dropped), so every value maps
-    # to may_be_empty=False and a missing staged dir raises.
-    with raw_partition_values(spark):
-        df = spark.read.parquet(str(root))
+
+    def rewrite(df: DataFrame) -> DataFrame:
         data_cols = [c for c in df.columns if c != part_col]
         cols = compile_pipeline(data_cols, processors)
         if list(cols) != data_cols:
@@ -132,24 +106,7 @@ def update_by_query(
                 "_update_by_query must preserve the table schema: "
                 f"{data_cols} -> {list(cols)}"
             )
-        counts = df.groupBy(part_col).agg(
-            F.count(F.lit(1)).alias("__n_total"),
-            F.sum(F.when(pred, 1).otherwise(0)).alias("__n_match"),
-        ).collect()
-        stats.partitions_scanned = len(counts)
-        touched = [r for r in counts if int(r["__n_match"] or 0) > 0]
-        if not touched:
-            return stats
-        for r in touched:
-            stats.rows_updated += int(r["__n_match"])
-            stats.rows_untouched += (
-                int(r["__n_total"]) - int(r["__n_match"])
-            )
-        stats.partitions_rewritten = len(touched)
-        vals = [r[part_col] for r in touched]
-        updated = df.filter(
-            touched_values_predicate(part_col, vals)
-        ).select(
+        return df.select(
             *[
                 F.when(pred, expr)
                 .otherwise(F.col(f"`{name}`"))
@@ -158,15 +115,11 @@ def update_by_query(
             ],
             F.col(f"`{part_col}`"),
         )
-        tmp_root = root / ".tmp-rewrite"
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        updated.write.partitionBy(part_col).mode("overwrite").parquet(
-            str(tmp_root)
+
+    # an update rewrites rows and never drops them, so a touched
+    # partition always stages a dir (empty_ok=False)
+    return UpdateStats(
+        *rewrite_matching_partitions(
+            spark, data_root, pred, partition_prefix, rewrite, empty_ok=False
         )
-        for marker in tmp_root.glob("_*"):
-            marker.unlink()
-        promote_staged(
-            root, tmp_root, part_col, {v: False for v in vals}
-        )
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        return stats
+    )

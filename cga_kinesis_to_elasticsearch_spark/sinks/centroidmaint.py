@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import broadcast
 
 from ..operators.similarity import _as_double, _probe_cells
-from ._swap import part_paths, recover_and_sweep, swap_in
+from ._swap import part_paths, recover_and_sweep, write_swapped
 
 __all__ = ["init_centroids", "refresh_centroids", "read_centroid_state"]
 
@@ -42,13 +42,12 @@ def init_centroids(
     root = Path(root)
     root.mkdir(parents=True, exist_ok=True)
     recover_and_sweep(root)
-    _, tmp, _ = part_paths(root, _PART)
-    centroids.select(
+    seeded = centroids.select(
         F.col("cell_id").cast("int"),
         _as_double(F.col("centroid")).alias("centroid"),
         F.lit(0).cast("long").alias("n"),
-    ).coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    swap_in(root, _PART)
+    )
+    write_swapped(seeded.coalesce(1), root, _PART)
 
 
 def read_centroid_state(spark: SparkSession, root: str | Path) -> DataFrame:
@@ -124,10 +123,8 @@ def refresh_centroids(
             (F.col("n") + F.coalesce(F.col("bn"), F.lit(0))).alias("n"),
         )
     )
-    _, tmp, _ = part_paths(root, _PART)
     try:
-        merged.coalesce(1).write.mode("overwrite").parquet(str(tmp))
+        write_swapped(merged.coalesce(1), root, _PART)
     finally:
         sums.unpersist(blocking=False)
-    swap_in(root, _PART)
     return absorbed

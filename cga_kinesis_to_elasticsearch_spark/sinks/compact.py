@@ -26,7 +26,7 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession, functions as F
 
-from ._swap import part_paths, recover_and_sweep, swap_in
+from ._swap import recover_and_sweep, write_swapped
 
 __all__ = ["CompactionStats", "compact_index"]
 
@@ -96,7 +96,6 @@ def compact_index(
             continue
         # distributed rewrite into a sibling temp dir, then the
         # deterministic-name atomic swap (_swap.py protocol)
-        _, tmp, _ = part_paths(root, part_dir.name)
         df = spark.read.parquet(str(part_dir)).coalesce(n_target)
         if cluster_by:
             df = df.sortWithinPartitions(
@@ -105,10 +104,7 @@ def compact_index(
                     for c in cluster_by
                 ]
             )
-        df.write.mode("overwrite").parquet(str(tmp))
-        for marker in tmp.glob("_*"):
-            marker.unlink()
-        swap_in(root, part_dir.name)
+        write_swapped(df, root, part_dir.name)
         stats.partitions_compacted += 1
         stats.files_after += len(_data_files(part_dir))
         stats.bytes_rewritten += total

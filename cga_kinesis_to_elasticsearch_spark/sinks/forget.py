@@ -13,11 +13,10 @@ unit of rewrite is the partition file set. Shape chosen for scale:
    most files outright);
 2. ONE distributed filter job rewrites every affected partition
    (partition pruning keeps untouched days unread; no extra shuffle,
-   so parallelism tracks the input splits), staged under
-   ``.tmp-rewrite`` and promoted per partition through the swap
-   protocol (readers never see a partial partition; a crash at any
-   step is repaired by `recover_and_sweep` — an interrupted staged
-   write is a `.tmp-*` dir it drops);
+   so parallelism tracks the input splits), staged and promoted per
+   partition by `_swap.write_partitions_swapped` (readers never see a
+   partial partition; a crash at any step is repaired by
+   `recover_and_sweep`);
 3. untouched partitions are never read twice nor rewritten — cost is
    bounded by the data that actually contains the targets.
 
@@ -40,19 +39,20 @@ AGAIN over the index directory, keyed on the forgotten ids::
 
 from __future__ import annotations
 
-import shutil
+from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ._swap import promote_staged, recover_and_sweep
+from ._swap import recover_and_sweep, write_partitions_swapped
 
 __all__ = [
     "ForgetStats",
     "forget",
     "raw_partition_values",
+    "rewrite_matching_partitions",
     "touched_values_predicate",
 ]
 
@@ -94,6 +94,75 @@ def raw_partition_values(spark: SparkSession):
             spark.conf.set(key, prev)
 
 
+def rewrite_matching_partitions(
+    spark: SparkSession,
+    data_root: str | Path,
+    hit: Column,
+    partition_prefix: str,
+    rewrite: Callable[[DataFrame], DataFrame],
+    empty_ok: bool,
+) -> tuple[int, int, int, int]:
+    """Rewrite, through ``rewrite``, every partition of the table under
+    ``data_root`` that holds a row matching ``hit`` (a NULL-safe
+    predicate), in two Spark jobs. Returns ``(partitions_scanned,
+    partitions_rewritten, rows_matched, rows_unmatched)``.
+
+    ``rewrite`` maps the whole table to its new rows, partition column
+    included; it is called before the match scan, so a rewrite that
+    fails at plan time runs no job. ``empty_ok``: whether a partition
+    whose rows ALL match may rightly stage nothing (a delete empties
+    it; an update never does)."""
+    root = Path(data_root)
+    if not root.exists():
+        return 0, 0, 0, 0
+    recover_and_sweep(root)
+    if not any(
+        d.is_dir() and d.name.startswith(partition_prefix)
+        for d in root.iterdir()
+    ):
+        return 0, 0, 0, 0
+    part_col = partition_prefix.rstrip("=")
+    # Partition-type inference is disabled for the whole rewrite so
+    # collected values are the exact directory strings (see
+    # raw_partition_values).
+    with raw_partition_values(spark):
+        df = spark.read.parquet(str(root))
+        out = rewrite(df)
+        # ONE match-scan job over the whole table (grouped by the
+        # partition column) replaces a per-partition agg loop — at 30
+        # daily partitions that is 30x fewer jobs, and the scan still
+        # reads only the predicate's columns.
+        counts = df.groupBy(part_col).agg(
+            F.count(F.lit(1)).alias("__n_total"),
+            F.sum(F.when(hit, 1).otherwise(0)).alias("__n_match"),
+        ).collect()  # one row per partition
+        touched = [r for r in counts if int(r["__n_match"] or 0) > 0]
+        if not touched:
+            return len(counts), 0, 0, 0
+        n_match = sum(int(r["__n_match"]) for r in touched)
+        n_total = sum(int(r["__n_total"]) for r in touched)
+        # ONE partitioned rewrite job for every touched partition: the
+        # partition filter prunes untouched days at the scan, no extra
+        # shuffle (parallelism = input splits, output files per
+        # partition track the input layout). Promotion matches the dir
+        # names Spark ACTUALLY wrote (escaping-safe) and only swaps in
+        # an empty dir when the match scan counted the WHOLE partition
+        # as matched and the rewrite may empty it — any other
+        # staged/touched mismatch raises.
+        vals = [r[part_col] for r in touched]
+        write_partitions_swapped(
+            out.filter(touched_values_predicate(part_col, vals)),
+            root,
+            part_col,
+            {
+                r[part_col]: empty_ok
+                and int(r["__n_match"]) == int(r["__n_total"])
+                for r in touched
+            },
+        )
+        return len(counts), len(touched), n_match, n_total - n_match
+
+
 @dataclass
 class ForgetStats:
     partitions_scanned: int = 0
@@ -110,71 +179,17 @@ def forget(
 ) -> ForgetStats:
     """Delete every row matching ``predicate`` from the partitioned
     table under ``data_root``. Returns per-run stats."""
-    root = Path(data_root)
-    stats = ForgetStats()
-    if not root.exists():
-        return stats
-    recover_and_sweep(root)
-    if not any(
-        d.is_dir() and d.name.startswith(partition_prefix)
-        for d in root.iterdir()
-    ):
-        return stats
     # Three-valued logic guard: a predicate that evaluates to NULL
     # (e.g. a comparison on a NULL enrichment column) must mean KEEP,
     # not delete — bare `~predicate` filters those rows out silently.
     hit = F.coalesce(predicate, F.lit(False))
-    part_col = partition_prefix.rstrip("=")
-    # ONE match-scan job over the whole table (grouped by the
-    # partition column) replaces a per-partition agg loop — at 30
-    # daily partitions that is 30x fewer jobs, and the scan still
-    # reads only the predicate's columns. Partition-type inference is
-    # disabled for the whole rewrite so collected values are the exact
-    # directory strings (see raw_partition_values).
-    with raw_partition_values(spark):
-        df = spark.read.parquet(str(root))
-        counts = df.groupBy(part_col).agg(
-            F.count(F.lit(1)).alias("__n_total"),
-            F.sum(F.when(hit, 1).otherwise(0)).alias("__n_match"),
-        ).collect()  # one row per partition
-        stats.partitions_scanned = len(counts)
-        touched = [r for r in counts if int(r["__n_match"] or 0) > 0]
-        if not touched:
-            return stats
-        for r in touched:
-            stats.rows_deleted += int(r["__n_match"])
-            stats.rows_kept += int(r["__n_total"]) - int(r["__n_match"])
-        stats.partitions_rewritten = len(touched)
-        vals = [r[part_col] for r in touched]
-        # ONE partitioned rewrite job for every touched partition: the
-        # partition filter prunes untouched days at the scan, no extra
-        # shuffle (parallelism = input splits, output files per
-        # partition track the input layout), then each partition dir is
-        # promoted through the same crash-safe swap. An interrupted
-        # batched write leaves only `.tmp-*` dirs, which
-        # recover_and_sweep drops. Promotion matches the dir names
-        # Spark ACTUALLY wrote (escaping-safe) and only swaps in an
-        # empty dir when the match scan counted the WHOLE partition as
-        # deleted — any other staged/touched mismatch raises.
-        tmp_root = root / ".tmp-rewrite"
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        (
-            df.filter(touched_values_predicate(part_col, vals))
-            .filter(~hit)
-            .write.partitionBy(part_col)
-            .mode("overwrite")
-            .parquet(str(tmp_root))
+    return ForgetStats(
+        *rewrite_matching_partitions(
+            spark,
+            data_root,
+            hit,
+            partition_prefix,
+            lambda df: df.filter(~hit),
+            empty_ok=True,
         )
-        for marker in tmp_root.glob("_*"):
-            marker.unlink()
-        promote_staged(
-            root,
-            tmp_root,
-            part_col,
-            {
-                r[part_col]: int(r["__n_match"]) == int(r["__n_total"])
-                for r in touched
-            },
-        )
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        return stats
+    )

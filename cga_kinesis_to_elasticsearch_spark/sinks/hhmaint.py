@@ -25,7 +25,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.heavyhitters import exact_counts, mg_merge
-from ._swap import part_paths, recover_and_sweep, swap_in
+from ._swap import part_paths, recover_and_sweep, write_swapped
 
 __all__ = ["refresh_heavy_hitters", "read_heavy_hitters"]
 
@@ -48,15 +48,12 @@ def refresh_heavy_hitters(
     batch_summary = exact_counts(
         batch.select(F.col(f"`{key_col}`").alias("key")), "key", k
     )
-    final, tmp, _ = part_paths(root, _PART)
+    final, _, _ = part_paths(root, _PART)
     if final.exists():
-        stored = spark.read.parquet(str(final))
-        merged = mg_merge(stored, batch_summary, k)
+        merged = mg_merge(spark.read.parquet(str(final)), batch_summary, k)
     else:
         merged = batch_summary
-    out = merged.coalesce(1)
-    out.write.mode("overwrite").parquet(str(tmp))
-    swap_in(root, _PART)
+    write_swapped(merged.coalesce(1), root, _PART)
     return spark.read.parquet(str(final)).count()
 
 

@@ -33,7 +33,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ._swap import part_paths, recover_and_sweep, swap_in
+from ._swap import recover_and_sweep, write_swapped
 
 __all__ = [
     "build_pq_index",
@@ -41,16 +41,6 @@ __all__ = [
     "query_pq_index",
     "read_codebooks",
 ]
-
-
-def _write_swapped(df: DataFrame, root: Path, part: str) -> None:
-    import shutil
-
-    _, tmp, _ = part_paths(root, part)
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    df.write.parquet(str(tmp))
-    swap_in(root, part)
 
 
 def build_pq_index(
@@ -80,7 +70,7 @@ def build_pq_index(
         for j in range(books.shape[0])
         for c in range(books.shape[1])
     ]
-    _write_swapped(
+    write_swapped(
         spark.createDataFrame(
             book_rows, "j int, c int, cent array<double>"
         ).coalesce(1),
@@ -90,10 +80,8 @@ def build_pq_index(
     enc = pq_encode(corpus, books, id_col, vec_col).select(
         F.col(id_col).alias("id"), "codes"
     )
-    _write_swapped(enc, root, "codes")
-    return int(
-        spark.read.parquet(str(root / "codes")).count()
-    )
+    codes = write_swapped(enc, root, "codes")
+    return int(spark.read.parquet(str(codes)).count())
 
 
 def read_codebooks(spark: SparkSession, root: str | Path):

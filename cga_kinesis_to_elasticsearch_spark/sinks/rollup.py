@@ -29,7 +29,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ._swap import part_paths, recover_and_sweep, swap_in
+from ._swap import recover_and_sweep, write_swapped
 
 __all__ = ["touched_days", "refresh_rollup"]
 
@@ -75,11 +75,7 @@ def refresh_rollup(
         part = fact_root / f"{date_col}={day}"
         if not part.exists():
             continue
-        day_slice = spark.read.parquet(str(part))
-        out = aggregate(day_slice)
-        part_name = f"{date_col}={day}"
-        _, tmp, _ = part_paths(rollup_root, part_name)
-        out.write.mode("overwrite").parquet(str(tmp))
-        swap_in(rollup_root, part_name)
+        out = aggregate(spark.read.parquet(str(part)))
+        write_swapped(out, rollup_root, part.name)
         refreshed += 1
     return refreshed

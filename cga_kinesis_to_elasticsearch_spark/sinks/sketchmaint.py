@@ -30,7 +30,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ._swap import part_paths, recover_and_sweep, swap_in
+from ._swap import recover_and_sweep, write_swapped
 
 __all__ = ["refresh_day_sketches", "read_day_sketches"]
 
@@ -65,7 +65,7 @@ def refresh_day_sketches(
     refreshed = 0
     for r in new_rows:
         part = f"{day_col}={r['day']}"
-        final, tmp, _ = part_paths(root, part)
+        final = root / part
         blobs = [(bytes(r["sketch"]),)]
         if final.exists():
             blobs += [
@@ -81,8 +81,7 @@ def refresh_day_sketches(
             )
             .coalesce(1)
         )
-        merged.write.mode("overwrite").parquet(str(tmp))
-        swap_in(root, part)
+        write_swapped(merged, root, part)
         refreshed += 1
     return refreshed
 

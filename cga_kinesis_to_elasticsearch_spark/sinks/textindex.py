@@ -500,9 +500,11 @@ def append_to_text_index(
     postings + rewrite of touched buckets (bounded by those buckets'
     stored size, not the corpus).
     """
-    import shutil
-
-    from ._swap import part_paths, recover_and_sweep, swap_in
+    from ._swap import (
+        recover_and_sweep,
+        write_partitions_swapped,
+        write_swapped,
+    )
 
     root = Path(root)
     (root / "postings").mkdir(parents=True, exist_ok=True)
@@ -562,37 +564,26 @@ def append_to_text_index(
             merged = stored.unionByName(bpost).dropDuplicates(
                 ["term", "doc_id"]
             )
-        staging = root / "postings" / ".tmp-__append__"
-        if staging.exists():
-            shutil.rmtree(staging)
-        merged.repartition(F.col("bucket")).write.partitionBy(
-            "bucket"
-        ).parquet(str(staging))
-        for part in sorted(staging.iterdir()):
-            if part.is_dir() and part.name.startswith("bucket="):
-                tmp = root / "postings" / f".tmp-{part.name}"
-                if tmp.exists():
-                    shutil.rmtree(tmp)
-                part.rename(tmp)
-                swap_in(root / "postings", part.name)
-        shutil.rmtree(staging, ignore_errors=True)
+        write_partitions_swapped(
+            merged.repartition(F.col("bucket")), root / "postings", "bucket"
+        )
 
         # doc lengths: append-only (new docs never collide with stored)
         new_dl = bpost.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
         new_dl.write.mode("append").parquet(str(docs_dir))
         # stats: recompute from the durable doc table (slim; one agg)
         full_dl = spark.read.parquet(str(docs_dir))
-        _, stats_tmp, _ = part_paths(root, "stats")
-        if stats_tmp.exists():
-            shutil.rmtree(stats_tmp)
-        full_dl.agg(
-            F.count("*").alias("n_docs"), F.sum("dl").alias("total_len")
-        ).coalesce(1).write.parquet(str(stats_tmp))
         # promote via the shared swap protocol — a crash mid-promotion
         # leaves either the old stats/ or a recoverable .old-stats, never
         # a window with NO stats dir (which would fail bm25 until the
         # next append, not just serve stale stats)
-        swap_in(root, "stats")
+        write_swapped(
+            full_dl.agg(
+                F.count("*").alias("n_docs"), F.sum("dl").alias("total_len")
+            ).coalesce(1),
+            root,
+            "stats",
+        )
         return n_new
     finally:
         bpost.unpersist(blocking=False)

@@ -37,17 +37,14 @@ this is the standard CDC-apply pattern storage engines run.
 
 from __future__ import annotations
 
-import shutil
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
-from ._swap import recover_and_sweep, swap_in
+from ._swap import recover_and_sweep, write_partitions_swapped
 
 __all__ = ["apply_upserts", "read_upsert_table", "UpsertStats"]
-
-_STAGING = ".tmp-__upsert__"
 
 
 @dataclass
@@ -84,9 +81,6 @@ def apply_upserts(
     root = Path(table_root)
     root.mkdir(parents=True, exist_ok=True)
     recover_and_sweep(root)
-    staging = root / _STAGING
-    if staging.exists():
-        shutil.rmtree(staging)
 
     key = F.col(f"`{key_col}`")
     tb = F.col(f"`{tiebreak_col}`") if tiebreak_col else key
@@ -134,17 +128,8 @@ def apply_upserts(
     latest = latest.observe(
         obs, F.sum((~F.col("__tomb")).cast("long")).alias("live")
     )
-    latest.write.partitionBy("bucket").parquet(str(staging))
+    stats.touched = write_partitions_swapped(latest, root, "bucket")
     stats.rows_in_touched = int(obs.get["live"] or 0)
-    for part in sorted(staging.iterdir()):
-        if part.is_dir() and part.name.startswith("bucket="):
-            tmp = root / f".tmp-{part.name}"
-            if tmp.exists():
-                shutil.rmtree(tmp)
-            part.rename(tmp)
-            swap_in(root, part.name)
-            stats.touched.append(part.name)
-    shutil.rmtree(staging, ignore_errors=True)
     return stats
 
 

@@ -41,6 +41,7 @@ __all__ = [
     "StreamConfig",
     "StreamMetrics",
     "ObservedCounters",
+    "run_before_write",
     "run_stream",
 ]
 
@@ -164,6 +165,25 @@ class StreamConfig:
     after_write: tuple[Callable[[DataFrame, list, int], None], ...] = ()
 
 
+def run_before_write(
+    docs: DataFrame,
+    stages: tuple[Callable[[DataFrame], DataFrame], ...],
+    held: list[DataFrame],
+) -> DataFrame:
+    """Apply ``before_write`` stages in order; returns the last output.
+
+    Caching rule: each stage's input is persisted and appended to
+    ``held``, which the caller unpersists when it is done. A filter
+    stage's index update is its own action, and the next action
+    re-reads the cache instead of re-running grok/enrichment or the
+    previous index join. The stream and the backfill job
+    (sinks/backfill.py) both run their stages through here."""
+    for stage in stages:
+        held.append(docs.persist())
+        docs = stage(docs)
+    return docs
+
+
 def _resolve_decoder(spark: SparkSession, decoder) -> Callable:
     """Resolve StreamConfig.decoder (callable or "json"/"arrow"/"jvm")
     to the decode callable, ONCE at job start (the "jvm" probe touches
@@ -227,13 +247,9 @@ def run_stream(
             )
             docs = run_pipeline(good, dim_provider(spark), cfg.pipeline)
             docs = docs.drop("log_message", "arrival_ts")
-            # cache each stage's input and the last output: a filter
-            # stage's index update is its own action, and the next
-            # action re-reads the cache instead of re-running
-            # grok/enrichment or the index join
-            for stage in cfg.before_write:
-                held.append(docs.persist())
-                docs = stage(docs)
+            docs = run_before_write(docs, cfg.before_write, held)
+            # the count, the sink write and the after_write stages all
+            # read the final docs
             held.append(docs.persist())
             # ONE aggregation serves the touched-index set, the sent
             # counter and the sink's file fan-out

@@ -144,7 +144,12 @@ class EsHadoopSink:
             self._ensured.add(name)
 
     # -- K1: bulk write ------------------------------------------------
-    def write(self, docs: DataFrame) -> None:
+    def write(
+        self, docs: DataFrame, max_rows_per_index: int | None = None
+    ) -> None:
+        # ``max_rows_per_index`` (ParquetIndexSink's file fan-out hint,
+        # passed by run_stream) goes unused: the connector sizes its
+        # own bulk batches
         # one JSON column per row, with the routing fields embedded so
         # the connector can resolve {es_index} and es.mapping.id —
         # docs already carries es_index/doc_id (pipeline output), so
@@ -169,14 +174,9 @@ class EsHadoopSink:
 
     # -- P4: retention (main.go:216-254) -------------------------------
     def drop_expired(self, days_to_keep: int, today=None) -> list[str]:
-        """Delete indices the reference rule would drop: keep .kibana
-        and names with a VALID date suffix >= cutoff; drop old dates
-        AND undated names — the same predicate as
-        operators/retention.retention_keep (main.go:227-239), not a
-        bare string compare on the last 10 chars."""
-        import re as _re
-
-        from ..operators.retention import DATE_SUFFIX_RE, cutoff_date_str
+        """Delete indices the reference rule would drop
+        (operators/retention.index_kept, main.go:227-239)."""
+        from ..operators.retention import cutoff_date_str, index_kept
 
         cutoff = cutoff_date_str(days_to_keep, today)
         listing = json.loads(
@@ -185,10 +185,7 @@ class EsHadoopSink:
         dropped = []
         for row in listing:
             name = row["index"] if isinstance(row, dict) else row
-            suffix = name[-10:]
-            has_date = len(name) >= 10 and _re.match(DATE_SUFFIX_RE, suffix)
-            keep = name == ".kibana" or (has_date and suffix >= cutoff)
-            if not keep:
+            if not index_kept(name, cutoff):
                 self._http("DELETE", f"/{name}")
                 self._ensured.discard(name)
                 dropped.append(name)

@@ -12,10 +12,26 @@ from cga_kinesis_to_elasticsearch_spark.pipeline import (
     run_pipeline,
 )
 from cga_kinesis_to_elasticsearch_spark.sinks.backfill import backfill
+from cga_kinesis_to_elasticsearch_spark.sinks.bulk import ParquetIndexSink
+from cga_kinesis_to_elasticsearch_spark.sinks.dedupindex import (
+    dedup_against_index,
+)
+from cga_kinesis_to_elasticsearch_spark.sinks.neardupindex import (
+    neardup_against_index,
+)
 from cga_kinesis_to_elasticsearch_spark.sources.envelopes import (
     ALLOWED_ORIGINS,
     synthesize_cf_dimensions,
     synthesize_envelopes,
+)
+from cga_kinesis_to_elasticsearch_spark.sources.records import (
+    read_raw_record_stream,
+    write_raw_records,
+)
+from cga_kinesis_to_elasticsearch_spark.streaming.job import (
+    StreamConfig,
+    drain,
+    run_stream,
 )
 
 
@@ -90,3 +106,80 @@ class TestBackfill:
             p.name for p in root.iterdir() if p.name.startswith("es_index=")
         }
         assert after == all_parts
+
+
+class TestBackfillBeforeWriteStages:
+    def test_stream_suppressed_duplicates_stay_suppressed(
+        self, spark, sf_dir, tmp_path
+    ):
+        """A deployment streaming with the exact and near-dup index
+        stages backfills with the same stages: every document the stream
+        suppressed stays out of the rewritten partitions."""
+        base = synthesize_envelopes(spark, sf_dir)
+        seq = F.col("sequence_number")
+        # a tenth of the records again under a new sequence number (exact
+        # duplicates) and another tenth with a token appended (near
+        # duplicates)
+        pick = F.crc32(seq) % 10
+        exact = base.filter(pick == 0).withColumn(
+            "sequence_number", F.concat(F.lit("dup-"), seq)
+        )
+        near = base.filter(pick == 5).select(
+            *[c for c in base.columns if c not in ("sequence_number", "log_message")],
+            F.concat(F.lit("near-"), seq).alias("sequence_number"),
+            F.col("log_message").withField(
+                "message", F.concat("log_message.message", F.lit(" again"))
+            ).alias("log_message"),
+        )
+        records = base.unionByName(exact).unionByName(near)
+        src = tmp_path / "raw"
+        write_raw_records(records, str(src))
+        dim = flatten_dimensions(*synthesize_cf_dimensions(spark)).cache()
+        cfg = PipelineConfig(allowed_origins=ALLOWED_ORIGINS)
+        text = "parsed_generic.log_event"
+        stages = (
+            lambda d: dedup_against_index(
+                d.sparkSession, d, str(tmp_path / "didx"), text, "doc_id"
+            ),
+            # single-hash bands: templated log lines collide often
+            lambda d: neardup_against_index(
+                d.sparkSession,
+                d,
+                str(tmp_path / "ndidx"),
+                text,
+                "doc_id",
+                n_hashes=4,
+                band_size=1,
+            ),
+        )
+        sink = ParquetIndexSink(tmp_path / "sink")
+        query, _ = run_stream(
+            spark,
+            read_raw_record_stream(spark, str(src)),
+            lambda s: dim,
+            sink,
+            StreamConfig(
+                checkpoint_location=str(tmp_path / "ck"),
+                available_now=True,
+                pipeline=cfg,
+                before_write=stages,
+            ),
+        )
+        drain(query)
+        root = tmp_path / "sink" / "data"
+
+        def landed_ids():
+            return sorted(
+                r.doc_id
+                for r in spark.read.parquet(str(root)).select("doc_id").collect()
+            )
+
+        streamed = landed_ids()
+        all_docs = run_pipeline(records, dim, cfg)
+        # both stages suppressed something in the stream
+        n_distinct = all_docs.select(text).distinct().count()
+        assert 0 < len(streamed) < n_distinct < all_docs.count()
+
+        stats = backfill(spark, records, dim, root, cfg, before_write=stages)
+        assert landed_ids() == streamed
+        assert stats.docs_written == len(streamed)

@@ -17,6 +17,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from cga_kinesis_to_elasticsearch_spark.config import EngineConfig
+from cga_kinesis_to_elasticsearch_spark.operators.enrichment import (
+    flatten_dimensions,
+)
 from cga_kinesis_to_elasticsearch_spark.sinks.bulk import ParquetIndexSink
 from cga_kinesis_to_elasticsearch_spark.sources.envelopes import (
     ALLOWED_ORIGINS,
@@ -145,6 +148,56 @@ class TestEsHadoopSinkHttp:
             "http://es.internal:9200/stray-index",
             "http://es.internal:9200/app-1.2.3-blue",
         ]
+
+
+class TestEsHadoopSinkInStream:
+    def test_stream_batch_reaches_connector(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        """run_stream passes its sink the file fan-out hint; the
+        es-hadoop sink must take it, so a micro-batch reaches the
+        connector's save (stubbed here, with the HTTP opener)."""
+        from pyspark.sql.readwriter import DataFrameWriter
+
+        from cga_kinesis_to_elasticsearch_spark.pipeline import PipelineConfig
+        from cga_kinesis_to_elasticsearch_spark.sources.records import (
+            write_raw_records,
+        )
+        from cga_kinesis_to_elasticsearch_spark.streaming.job import (
+            StreamConfig,
+            run_stream,
+        )
+
+        saved: list[int] = []
+
+        def fake_save(writer, *args, **kwargs):
+            saved.append(writer._df.count())
+
+        monkeypatch.setattr(DataFrameWriter, "save", fake_save)
+        src = tmp_path / "raw"
+        write_raw_records(synthesize_envelopes(spark, sf_dir), str(src))
+        dim = flatten_dimensions(*synthesize_cf_dimensions(spark))
+        opener = _FakeOpener()
+        sink = EsHadoopSink(
+            _cfg(es_url="es.internal:9200"),
+            error_root=tmp_path / "errors",
+            opener=opener,
+        )
+        query, m = run_stream(
+            spark,
+            read_raw_record_stream(spark, str(src)),
+            lambda s: dim,
+            sink,
+            StreamConfig(
+                checkpoint_location=str(tmp_path / "ck"),
+                available_now=True,
+                pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
+            ),
+        )
+        drain(query)
+        assert m.sent_count > 0
+        assert sum(saved) == m.sent_count
+        assert any(method == "PUT" for method, _, _ in opener.calls)
 
 
 class TestProductionWiring:

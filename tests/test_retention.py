@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from cga_kinesis_to_elasticsearch_spark.operators.retention import (
     cutoff_date_str,
     drop_old_partitions,
+    index_kept,
     retention_keep,
 )
 
@@ -28,6 +29,8 @@ CASES = [
     ("x-0000-01-01", False),
     ("gorouter-2024-13-45", True),  # regex-valid garbage date, >= cutoff lexic.
     ("gorouter-2023-13-45", False),
+    # full-width digits: Go's (and Java's) \d is ASCII-only
+    ("gorouter-\uff12\uff10\uff12\uff14-02-05", False),
 ]
 
 
@@ -42,6 +45,8 @@ class TestPredicate:
         }
         for name, expected in CASES:
             assert got[name] is expected, name
+            # the Python form (index listings) follows the same table
+            assert index_kept(name, CUTOFF) is expected, name
 
     @given(
         st.dates(dt.date(1990, 1, 1), dt.date(2100, 1, 1)),

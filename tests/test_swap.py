@@ -4,8 +4,12 @@ for all three consumers (sketchmaint, rollup, compaction)."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
+import cga_kinesis_to_elasticsearch_spark.sinks as sinks_pkg
 from cga_kinesis_to_elasticsearch_spark.sinks._swap import (
     part_paths,
     recover_and_sweep,
@@ -202,3 +206,62 @@ class TestCompactionClustering:
             spark.read.parquet(str(part)).agg({"event_id": "count"}).first()[0]
             == 200
         )
+
+
+def _swap_protocol_uses(src: str) -> list[tuple[int, str]]:
+    """(line, what) for each call of the swap steps and each ``.tmp-``
+    string built in code (docstrings excluded) in a module's source."""
+    tree = ast.parse(src)
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node,
+            (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            if name in ("swap_in", "promote_staged"):
+                found.append((node.lineno, f"calls {name}"))
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and ".tmp-" in node.value
+            and id(node) not in docstrings
+        ):
+            found.append((node.lineno, "builds a .tmp- path"))
+    return found
+
+
+class TestOneWayIntoTheProtocol:
+    def test_guard_sees_each_kind_of_use(self):
+        src = (
+            '"""doc names .tmp-x"""\n'
+            "swap_in(root, p)\n"
+            "_swap.promote_staged(root, t, c, {})\n"
+            "t = root / f'.tmp-{p}'\n"
+        )
+        assert [w for _, w in _swap_protocol_uses(src)] == [
+            "calls swap_in",
+            "calls promote_staged",
+            "builds a .tmp- path",
+        ]
+
+    def test_only_swap_module_stages_or_swaps(self):
+        """Every sink commits through _swap.write_swapped or
+        _swap.write_partitions_swapped: no other module under sinks/
+        calls the swap steps or names a staging dir itself."""
+        offenders = [
+            f"{path.name}:{line} {what}"
+            for path in sorted(Path(sinks_pkg.__file__).parent.glob("*.py"))
+            if path.name != "_swap.py"
+            for line, what in _swap_protocol_uses(path.read_text())
+        ]
+        assert offenders == []
