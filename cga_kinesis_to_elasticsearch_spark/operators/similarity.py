@@ -77,8 +77,9 @@ def _norm(a: Column) -> Column:
 
 def cosine_similarity(a: Column, b: Column, ndigits: int | None = 4) -> Column:
     """Cosine similarity of two array<double> columns (sequential fold,
-    same order as DuckDB's list_cosine_similarity)."""
-    sim = _dot(a, b) / (_norm(a) * _norm(b))
+    same order as DuckDB's list_cosine_similarity). A zero vector has
+    no direction: its similarity is NULL, not an ANSI divide error."""
+    sim = F.try_divide(_dot(a, b), _norm(a) * _norm(b))
     return F.round(sim, ndigits) if ndigits is not None else sim
 
 

@@ -1,8 +1,10 @@
 """Crash-safe partition-directory swap protocol shared by every
-maintained-state sink. :func:`write_swapped` (one directory) and
+maintained-state sink. :func:`write_swapped` (one directory),
 :func:`write_partitions_swapped` (one ``partitionBy`` job, many
-directories) are the only ways into it: no other sink module stages a
-``.tmp-`` dir or calls the swap steps itself.
+directories) and :func:`write_keyed` (one ``partitionBy`` job whose
+files replace those of an earlier attempt with the same key) are the
+only ways into it: no other sink module stages a ``.tmp-`` dir or
+calls the swap steps itself.
 
 Protocol per partition ``<part>`` (e.g. ``day=2024-01-03``) under a
 root directory:
@@ -23,6 +25,13 @@ next run can classify and repair via :func:`recover_and_sweep`:
   3 and 4 — the old dir is superseded; drop it.
 - ``.old-<part>`` present, ``<part>`` missing: crash between steps
   2 and 3 — the old dir IS the last durable state; rename it back.
+
+A keyed commit (:func:`write_keyed`) swaps files, not directories: it
+stages in ``.tmp-<key>``, removes every file of an earlier attempt
+with the same key, then renames the staged files in as
+``<key>~<name>``. A crash leaves the ``.tmp-`` dir, swept as above, or
+part of the attempt's files, which the replayed attempt removes before
+it renames its own.
 
 Single-writer assumption: streaming foreachBatch executes batches
 sequentially, so recovery at refresh start never races a concurrent
@@ -47,6 +56,8 @@ __all__ = [
     "promote_staged",
     "write_swapped",
     "write_partitions_swapped",
+    "write_keyed",
+    "file_key",
 ]
 
 _TMP = ".tmp-"
@@ -54,6 +65,8 @@ _OLD = ".old-"
 # the one staging dir of a partitioned write, under the table root;
 # the _TMP prefix makes recover_and_sweep clear it after a crash
 _STAGING = f"{_TMP}rewrite"
+# separates a keyed commit's attempt key from the writer's file name
+_KEY_SEP = "~"
 
 
 def part_paths(root: Path, part: str) -> tuple[Path, Path, Path]:
@@ -202,3 +215,39 @@ def write_partitions_swapped(
     promoted = promote_staged(root, staging, part_col, expected)
     shutil.rmtree(staging, ignore_errors=True)
     return promoted
+
+
+def file_key(name: str) -> str | None:
+    """The attempt key a data file was committed under by
+    :func:`write_keyed`, or None for a file written any other way."""
+    key, sep, _ = name.partition(_KEY_SEP)
+    return key if sep else None
+
+
+def write_keyed(df: DataFrame, root: Path, part_col: str, key: str) -> None:
+    """Keyed commit: ONE ``partitionBy(part_col)`` job writes ``df``
+    into ``.tmp-<key>``; every file an earlier attempt committed under
+    ``key`` is removed from every ``<part_col>=`` dir under ``root``
+    (not only the dirs this attempt wrote: a replay may route
+    differently, or stage nothing); then each staged file is renamed
+    into its dir as ``<key>~<name>``. Files of other keys are never
+    touched, so a replayed attempt replaces exactly its own output.
+    ``key`` holds no ``~`` or ``/``."""
+    staging = root / f"{_TMP}{key}"
+    shutil.rmtree(staging, ignore_errors=True)
+    df.write.partitionBy(part_col).parquet(str(staging))
+    prefix, mark = f"{part_col}=", f"{key}{_KEY_SEP}"
+    for d in root.iterdir():
+        if d.is_dir() and d.name.startswith(prefix):
+            for f in d.iterdir():
+                if f.name.startswith(mark):
+                    f.unlink()
+    for d in staging.iterdir():
+        if not (d.is_dir() and d.name.startswith(prefix)):
+            continue
+        (root / d.name).mkdir(exist_ok=True)
+        for f in d.iterdir():
+            # checksum and marker files stay behind with the staging dir
+            if not f.name.startswith((".", "_")):
+                f.rename(root / d.name / f"{mark}{f.name}")
+    shutil.rmtree(staging, ignore_errors=True)

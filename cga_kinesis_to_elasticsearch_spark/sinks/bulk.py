@@ -15,17 +15,31 @@ names). Batching (1000 actions / 5 MB / 15 s, bulk_processor.go:62-63,
 main.go:189) maps to the micro-batch trigger + connector batch sizing;
 nothing to hand-build.
 
-At-least-once + deterministic ``doc_id`` (pipeline.py, T1) makes
-replays idempotent at read time: ``read_index`` drops duplicate doc_ids,
-the exact analogue of ES overwriting a document by ``_id``.
+Exactly-once at write (T1), the analogue of ES overwriting a document
+by ``_id`` (main.go:400,447): inside a stream's micro-batch, ``write``
+commits under the key ``<query id>.<batch id>`` (``_swap.write_keyed``),
+so a replayed batch replaces its own files instead of appending a
+second copy. The source contract that makes this enough: a doc_id
+reaches at most one batch of one stream, because doc_id =
+md5(shard, sequence number) (pipeline.py) and Kinesis re-delivers a
+sequence number only when a batch is replayed. ``read_index`` therefore
+scans an index whose files all carry keys of one query id as is, and
+drops duplicate doc_ids only in the other indices: those that a second
+checkpoint, an unkeyed ``write`` outside a stream (``replay_errors``) or
+a rewrite (``backfill``, ``compact_index``, ``forget``,
+``update_by_query``) touched.
 """
 
 from __future__ import annotations
 
 import json
+import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+from ._swap import decode_part_name, file_key, write_keyed
 
 __all__ = ["to_bulk_actions", "ParquetIndexSink", "DEFAULT_MAPPING"]
 
@@ -40,6 +54,45 @@ DEFAULT_MAPPING = {
         }
     }
 }
+
+
+# data root -> (listing, the schema Spark inferred for that listing)
+_SCHEMAS: dict[str, tuple[dict, StructType]] = {}
+
+
+def _commit_key(spark: SparkSession) -> str | None:
+    """``<query id>.<batch id>`` when called inside a stream's
+    micro-batch (Structured Streaming sets both local properties on the
+    thread that runs ``foreachBatch``, and they survive a restart from
+    the same checkpoint), else None."""
+    sc = spark.sparkContext
+    query = sc.getLocalProperty("sql.streaming.queryId")
+    batch = sc.getLocalProperty("streaming.sql.batchId")
+    return f"{query}.{batch}" if query and batch is not None else None
+
+
+def _list_indices(data: Path) -> dict[str, tuple]:
+    """``es_index=`` dir name -> sorted (name, size, mtime) of the data
+    files in it, as Spark sees them (names starting with ``_`` or ``.``
+    are not data)."""
+    out: dict[str, tuple] = {}
+    if not data.is_dir():
+        return out
+    for d in os.scandir(data):
+        if d.is_dir() and d.name.startswith("es_index="):
+            out[d.name] = tuple(sorted(
+                (f.name, st.st_size, st.st_mtime_ns)
+                for f in os.scandir(d.path)
+                if not f.name.startswith(("_", "."))
+                for st in (f.stat(),)
+            ))
+    return out
+
+
+def _single_stream(files: tuple) -> bool:
+    """Whether every file was committed by one stream query."""
+    keys = {file_key(name) for name, _, _ in files}
+    return None not in keys and len({k.rpartition(".")[0] for k in keys}) <= 1
 
 
 def to_bulk_actions(docs: DataFrame) -> DataFrame:
@@ -68,12 +121,15 @@ class ParquetIndexSink:
 
     Layout::
 
-        <root>/data/es_index=<class>-<YYYY-MM-DD>/part-*.parquet
+        <root>/data/es_index=<class>-<YYYY-MM-DD>/<key>~part-*.parquet
         <root>/_mappings/<class>-<YYYY-MM-DD>.json   (P3 marker)
-        <root>/_errors/batch_id=<n>/part-*.parquet   (T2 bucket)
+        <root>/_errors/batch_id=<n>/<key>~part-*.parquet   (T2 bucket)
 
-    ``write`` appends day-partitioned parquet — the partition column IS
-    the index name, so a single append fans out to every index touched
+    (``<key>~`` = ``<query id>.<batch id>~`` inside a stream; files
+    written outside one keep Spark's ``part-*`` names.)
+
+    ``write`` commits day-partitioned parquet — the partition column IS
+    the index name, so a single write fans out to every index touched
     by the batch with no per-index job (at 100 TB: one write job per
     micro-batch, dynamic partition overwrite off, no shuffle — the
     partitioning is carried by the writer, not an exchange).
@@ -136,17 +192,30 @@ class ParquetIndexSink:
             need = -(-int(max_rows_per_index) // self.TARGET_FILE_ROWS)
             n_salt = max(1, min(self.WRITE_SALT, need))
         salt = F.pmod(F.xxhash64("doc_id"), F.lit(n_salt))
-        docs.repartition(par, F.col("es_index"), salt).write.mode(
-            "append"
-        ).partitionBy("es_index").parquet(str(self.root / "data"))
+        self._commit(
+            docs.repartition(par, F.col("es_index"), salt), "data", "es_index"
+        )
 
     def write_errors(self, poison: DataFrame, batch_id: int) -> None:
         """T2: corrupt records land here with their raw bytes intact —
         replayable once the bug is fixed, unlike the reference's
-        skip-on-restart which loses them."""
-        poison.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).partitionBy("batch_id").parquet(str(self.root / "_errors"))
+        skip-on-restart which loses them. Committed like ``write``: a
+        replayed batch replaces its own poison rows, and batch 0 of a
+        fresh checkpoint (another query id) adds to the old batch 0."""
+        self._commit(
+            poison.withColumn("batch_id", F.lit(batch_id)), "_errors", "batch_id"
+        )
+
+    def _commit(self, df: DataFrame, table: str, part_col: str) -> None:
+        """Inside a micro-batch, a keyed commit (``_swap.write_keyed``);
+        outside a stream there is no key, and ``df`` is appended."""
+        key = _commit_key(df.sparkSession)
+        if key is not None:
+            write_keyed(df, self.root / table, part_col, key)
+        else:
+            df.write.mode("append").partitionBy(part_col).parquet(
+                str(self.root / table)
+            )
 
     # -- read-back / verification --------------------------------------
     def indices(self) -> list[str]:
@@ -160,12 +229,40 @@ class ParquetIndexSink:
         )
 
     def read_index(self, spark: SparkSession, pattern: str | None = None) -> DataFrame:
-        """Read documents back, deduplicating replayed doc_ids (the ES
-        overwrite-by-_id semantics, T1)."""
-        df = spark.read.parquet(str(self.root / "data"))
+        """Read documents back, each doc_id once (the ES
+        overwrite-by-_id semantics, T1).
+
+        Read rule, from one driver-side listing of ``data/es_index=*/``:
+        an index whose files all carry commit keys of one stream query
+        holds each doc_id once (module docstring) and is scanned as is;
+        every other index goes through ``dropDuplicates(["doc_id"])``
+        over its own rows only, which is exact because a doc_id always
+        routes to one index. The scan takes the schema Spark inferred
+        for the same listing before (``_SCHEMAS``), so an unchanged
+        sink is read without the footer-inference job."""
+        data = self.root / "data"
+        listing = _list_indices(data)
+        memo = _SCHEMAS.get(str(data))
+        if memo is None or memo[0] != listing:
+            memo = (listing, spark.read.parquet(str(data)).schema)
+            _SCHEMAS[str(data)] = memo
+        df = spark.read.schema(memo[1]).parquet(str(data))
         if pattern is not None:
             df = df.filter(F.col("es_index").rlike(pattern))
-        return df.dropDuplicates(["doc_id"])
+        mixed = [
+            decode_part_name(name)[1]
+            for name, files in listing.items()
+            if not _single_stream(files)
+        ]
+        if not mixed:
+            return df
+        if len(mixed) == len(listing):
+            return df.dropDuplicates(["doc_id"])
+        # never NULL, so the two branches split the rows exactly
+        in_mixed = F.coalesce(F.col("es_index").isin(mixed), F.lit(False))
+        return df.filter(~in_mixed).unionByName(
+            df.filter(in_mixed).dropDuplicates(["doc_id"])
+        )
 
     def read_errors(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(str(self.root / "_errors"))
@@ -175,11 +272,12 @@ class ParquetIndexSink:
         partition — the ops listing the reference's retention cron
         walks (main.go:214 lists indices before deciding drops).
 
-        Scale shape: a grouped count on the PARTITION column — the
-        scan prunes to directory listings + parquet footer counts, no
-        data columns read."""
-        df = spark.read.parquet(str(self.root / "data"))
-        return df.groupBy(F.col("es_index").alias("index")).agg(
+        Counts each doc_id once, as ES's ``docs.count`` does: the
+        count runs over ``read_index``. Scale shape: over a
+        single-stream index a grouped count on the PARTITION column —
+        the scan prunes to directory listings + parquet footer counts,
+        no data columns read; only the other indices read ``doc_id``."""
+        return self.read_index(spark).groupBy(F.col("es_index").alias("index")).agg(
             F.count(F.lit(1)).alias("doc_count")
         )
 

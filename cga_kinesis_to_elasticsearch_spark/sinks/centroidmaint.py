@@ -77,11 +77,12 @@ def refresh_centroids(
     v = batch.select(_as_double(F.col(vec_col)).alias("__v")).filter(
         F.col("__v").isNotNull()
     )
-    assigned = v.crossJoin(broadcast(cen_row)).select(
-        "__v",
-        F.element_at(_probe_cells(F.col("__v"), 1), 1)["cell_id"].alias(
-            "cell_id"
-        ),
+    # a zero-norm vector's similarity is NULL everywhere: no cell
+    top = F.element_at(_probe_cells(F.col("__v"), 1), 1)
+    assigned = (
+        v.crossJoin(broadcast(cen_row))
+        .select("__v", top["cell_id"].alias("cell_id"), top["sim"].alias("sim"))
+        .filter(F.col("sim").isNotNull())
     )
     sums = (
         assigned.select("cell_id", F.posexplode("__v").alias("pos", "val"))

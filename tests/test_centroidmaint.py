@@ -82,3 +82,22 @@ class TestCentroidMaintenance:
         st = read_centroid_state(spark, root).first()
         assert st["n"] == 2
         assert st["centroid"][0] == pytest.approx(4.0, abs=1e-9)
+
+
+class TestZeroVector:
+    def test_zero_vector_is_dropped_not_fatal(self, spark, tmp_path):
+        # an all-zero embedding has no cosine direction: under ANSI
+        # mode a plain division failed the whole batch
+        root = tmp_path / "c"
+        init_centroids(
+            spark, _cens(spark, [(0, [1.0, 0.0]), (1, [0.0, 1.0])]), root
+        )
+        absorbed = refresh_centroids(
+            spark, _batch(spark, [[0.0, 0.0], [2.0, 0.0], [0.0, 4.0]]), root
+        )
+        st = {
+            r["cell_id"]: (r["centroid"], r["n"])
+            for r in read_centroid_state(spark, root).collect()
+        }
+        assert absorbed == 2
+        assert st[0] == ([2.0, 0.0], 1) and st[1] == ([0.0, 4.0], 1)
