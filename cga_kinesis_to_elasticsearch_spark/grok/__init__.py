@@ -11,7 +11,6 @@ from .spark import (
     duckdb_exprs,
     grok_columns,
     grok_match,
-    grok_parse_pandas,
     grok_schema,
     grok_struct,
 )
@@ -27,7 +26,6 @@ __all__ = [
     "duckdb_exprs",
     "grok_columns",
     "grok_match",
-    "grok_parse_pandas",
     "grok_schema",
     "grok_struct",
 ]

@@ -1,12 +1,20 @@
 """Grok -> Spark column compilation (and DuckDB SQL emission for the
 correctness oracle).
 
-The default strategy keeps the hot path entirely JVM-side: one
-``regexp_extract(line, rx, group_idx)`` (+ cast) per capture, all inside
-whole-stage codegen. That evaluates the regex once per capture; for wide
-patterns (ROUTERACCESS: 23 captures) ``grok_parse_pandas`` offers a
-single-pass Arrow-batched alternative — benchmark decides per pattern
-width (bench.py).
+Three paths, each for its own shape:
+
+- ``grok_columns`` / ``grok_struct``: one ``regexp_extract(line, rx,
+  group_idx)`` (+ cast) per capture, all inside whole-stage codegen.
+  The regex runs once per capture, which is the cheaper path for
+  narrow patterns such as the 1- and 3-capture declared ones (PROPSKV,
+  DOCHEAD).
+- ``grok_parse_many`` / ``grok_parse_into``: one packed
+  ``regexp_replace`` per row and pattern, unpacked by ``split`` — the
+  regex runs once however many captures there are, for wide patterns
+  (ROUTERACCESS: 23 captures) and the parity pipeline's route set.
+- ``grok_parse_auto`` / ``grok_parse_struct_pandas``: an Arrow-batched
+  Python fallback, only for a user pattern whose regex the Java
+  dialect rejects (``java_dialect_ok``).
 
 Equivalent reference behavior: grok Parse/ParseTyped/Match
 (vendor/github.com/vjeantet/grok/grok.go:187-259).
@@ -39,7 +47,6 @@ __all__ = [
     "grok_parse_into",
     "grok_parse_many",
     "grok_multimap",
-    "grok_parse_pandas",
     "grok_parse_struct_pandas",
     "grok_parse_auto",
     "java_dialect_ok",
@@ -261,54 +268,6 @@ def grok_multimap(
         *[F.col(f"`{c}`") for c in df.columns if c not in ("__graw", "__garr")],
         *outs,
     )
-
-
-def grok_parse_pandas(
-    grok: Grok,
-    df: "DataFrame",
-    text_col: str,
-    pattern: str | CompiledPattern,
-    prefix: str = "",
-) -> "DataFrame":
-    """Single-pass parse via mapInPandas for wide patterns: the regex is
-    evaluated once per row instead of once per capture. Python regex
-    dialect (identical semantics for the shipped pattern library; the
-    compiler guarantees plain groups only).
-
-    Appends one column per capture to the input schema.
-    """
-    cp = _resolve(grok, pattern)
-    import re as _re
-
-    rx = _re.compile(cp.regex)
-    fields = cp.fields
-    schema = StructType(
-        df.schema.fields
-        + [StructField(prefix + c.name, _SPARK_TYPE[c.type], True) for c in fields]
-    )
-
-    def run(batches: Iterator["object"]) -> Iterator["object"]:
-        for pdf in batches:
-            texts = pdf[text_col]
-            cols: dict[str, list[object]] = {prefix + c.name: [] for c in fields}
-            for t in texts:
-                m = rx.search(t) if isinstance(t, str) else None
-                for c in fields:
-                    v: object = None
-                    if m is not None:
-                        raw = m.group(c.group) or ""
-                        if c.type == "int":
-                            v = int(raw) if raw else None
-                        elif c.type == "float":
-                            v = float(raw) if raw else None
-                        else:
-                            v = raw
-                    cols[prefix + c.name].append(v)
-            for k, vals in cols.items():
-                pdf[k] = vals
-            yield pdf
-
-    return df.mapInPandas(run, schema)
 
 
 def java_dialect_ok(spark: "object", regex: str) -> bool:

@@ -1,28 +1,37 @@
-"""Table loading for the driver-generated testdata (TESTDATA.md).
+"""Parquet table resolution: the engine's one resolved-table memo, and
+table loading for the driver-generated testdata (TESTDATA.md).
+
+The memo: DataSource resolution (file listing + footer schema
+inference) costs ~100 ms of driver time and a Spark job PER
+``spark.read.parquet`` call, and every declared query and every search
+re-reads its tables. A resolved frame is an immutable logical plan
+over a FROZEN file listing, so it is exact for as long as the files
+under its path are the ones it listed. :func:`read_parquet` therefore
+keeps one entry per ``(applicationId, path)`` holding the listing it
+was built from — the sorted ``(relative name, size, mtime_ns)`` of the
+path's data files — and reuses the frame only while a fresh listing
+is equal; any other call builds the frame again and replaces the
+entry. No path has to be declared immutable, and an append, rewrite or
+delete under a cached path can never be served a stale listing. Keyed
+by applicationId so a new session never sees a plan of an old one.
 
 The driver's parquet files carry INT64 TIMESTAMP(NANOS) columns, which
-Spark refuses outright ([PARQUET_TYPE_ILLEGAL]). We flip the legacy
-``nanosAsLong`` conf and rebuild proper TimestampType columns
+Spark refuses outright ([PARQUET_TYPE_ILLEGAL]). A build flips the
+legacy ``nanosAsLong`` conf and rebuilds proper TimestampType columns
 (truncating to micros — the same truncation DuckDB applies when casting
 TIMESTAMP_NS to its micros-native TIMESTAMP, so both engines agree).
-
-Nanos columns are detected from the parquet footer via pyarrow — a
-metadata-only read, no data scanned.
+Nanos columns are detected from the first data file's footer via
+pyarrow — a metadata-only read, no data scanned.
 """
 
 from __future__ import annotations
 
-from functools import lru_cache
+import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import TimestampType
 
-__all__ = [
-    "load_table",
-    "TABLES",
-    "register_immutable_root",
-    "invalidate_cached_tables",
-]
+__all__ = ["load_table", "read_parquet", "TABLES"]
 
 TABLES = (
     "region",
@@ -37,84 +46,50 @@ TABLES = (
     "embeddings",
 )
 
+# (applicationId, path) -> (listing, frame, whether it has nanos columns)
+_TABLES: dict[tuple[str, str], tuple[tuple, DataFrame, bool]] = {}
+
+
+def _list_data_files(path: str) -> tuple:
+    """Sorted ``(relative name, size, mtime_ns)`` of the data files
+    Spark reads under ``path``: a single file lists itself; a
+    directory is walked, skipping names that start with ``_`` or ``.``
+    as Spark does (``_SUCCESS``, ``.crc``, staging dirs)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    out = []
+
+    def walk(d: str, prefix: str) -> None:
+        for e in os.scandir(d):
+            if e.name.startswith(("_", ".")):
+                continue
+            if e.is_dir():
+                walk(e.path, f"{prefix}{e.name}/")
+            else:
+                st = e.stat()
+                out.append((prefix + e.name, st.st_size, st.st_mtime_ns))
+
+    if os.path.isdir(path):
+        walk(path, "")
+    return tuple(sorted(out))
+
 
 def _nanos_columns(path: str) -> tuple[str, ...]:
-    import pyarrow.parquet as pq
     import pyarrow as pa
-    from pathlib import Path
+    import pyarrow.parquet as pq
 
-    p = Path(path)
-    if p.is_dir():
-        # Spark-written table: a directory of part files with one
-        # shared schema — probe the first part's footer (the driver
-        # testdata is flat single files; directory layouts come from
-        # the scale-sweep generator, scripts/gen_scale_data.py)
-        part = next(
-            (q for q in sorted(p.rglob("*.parquet")) if q.is_file()), None
-        )
-        if part is None:
-            return ()
-        p = part
-    schema = pq.read_schema(p)
-    out = []
-    for field in schema:
-        t = field.type
-        if pa.types.is_timestamp(t) and t.unit == "ns":
-            out.append(field.name)
-    return tuple(out)
+    return tuple(
+        f.name
+        for f in pq.read_schema(path)
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    )
 
 
-# footer-schema memo, gated like _DF_CACHE: only immutable roots may
-# cache (a rewritten mutable file could change its footer schema)
-_nanos_columns_cached = lru_cache(maxsize=256)(_nanos_columns)
-
-
-# Resolved-DataFrame cache: DataSource resolution (file listing +
-# footer schema inference) costs ~100 ms of driver time PER
-# spark.read.parquet call, and every declared query re-loads its
-# tables — across a 47-query bench that is tens of seconds of pure
-# plan-time overhead. The testdata is immutable and DataFrames are
-# immutable logical plans, so the resolved frame is reusable; keyed by
-# applicationId so a new session never sees a stale plan. (On a real
-# cluster this is the role of catalog tables — resolve once, reference
-# everywhere.)
-#
-# The memoized frame is a FROZEN file listing — a rewrite/append to a
-# cached path inside the same application would serve stale reads or
-# missing-file task failures. The cache therefore only engages for
-# paths a caller has declared immutable (the testdata roots, by
-# default), and ``invalidate_cached_tables`` exists for anything else.
-_DF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# Path prefixes treated as immutable for the lifetime of the process.
-# Mutating writers (sinks/upsert.py, forget.py, compact.py) operate on
-# their own roots, which are never under these prefixes.
-_IMMUTABLE_PREFIXES: list[str] = ["/root/testdata/"]
-
-
-def register_immutable_root(prefix: str) -> None:
-    """Opt a directory tree into resolved-frame caching. Only do this
-    for data that is never rewritten within one Spark application."""
-    if prefix and prefix not in _IMMUTABLE_PREFIXES:
-        _IMMUTABLE_PREFIXES.append(prefix)
-
-
-def invalidate_cached_tables(path_prefix: str = "") -> int:
-    """Drop cached resolved frames whose path starts with
-    ``path_prefix`` (all of them by default). Returns the number of
-    entries dropped — call after mutating a cached path in-place."""
-    hits = [k for k in _DF_CACHE if k[1].startswith(path_prefix)]
-    for k in hits:
-        del _DF_CACHE[k]
-    return len(hits)
-
-
-def _cacheable(path: str) -> bool:
-    return any(path.startswith(p) for p in _IMMUTABLE_PREFIXES)
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read ``<sf_dir>/<name>.parquet`` with timestamp normalization.
+def _build(
+    spark: SparkSession, path: str, files: tuple
+) -> tuple[DataFrame, bool]:
+    """Resolve ``path`` with timestamp normalization.
 
     All timestamp columns surface as TimestampType (UTC instants):
     nanos columns are repaired via the legacy long path; naive micros
@@ -122,19 +97,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     UTC, and epoch functions reject NTZ) by disabling NTZ inference —
     with a cast fallback should the conf ever become static.
     """
-    path = f"{sf_dir}/{name}.parquet"
-    cacheable = _cacheable(path)
-    nanos = (
-        _nanos_columns_cached(path) if cacheable else _nanos_columns(path)
-    )
+    nanos = ()
+    if files:
+        # a directory's parts share one schema: probe the first
+        first = path if os.path.isfile(path) else os.path.join(path, files[0][0])
+        nanos = _nanos_columns(first)
     if nanos:
-        # conf consulted at execution too — set it even on a cache hit
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, path)
-    if cacheable:
-        cached = _DF_CACHE.get(key)
-        if cached is not None:
-            return cached
     try:
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     except Exception:
@@ -152,6 +121,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(
                 field.name, F.col(field.name).cast(TimestampType())
             )
-    if cacheable:
-        _DF_CACHE[key] = df
-    return df
+    return df, bool(nanos)
+
+
+def read_parquet(spark: SparkSession, path: str) -> tuple[tuple, DataFrame]:
+    """``(listing, frame)`` for the parquet file or directory ``path``,
+    through the resolved-table memo (module docstring): the frame is
+    the one built before while the listing is unchanged, else a new
+    one."""
+    key = (spark.sparkContext.applicationId, path)
+    files = _list_data_files(path)
+    entry = _TABLES.get(key)
+    if entry is None or entry[0] != files:
+        entry = (files, *_build(spark, path, files))
+        _TABLES[key] = entry
+    elif entry[2]:
+        # consulted at execution too — set it on every hit
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return entry[0], entry[1]
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read ``<sf_dir>/<name>.parquet`` (a file or a directory of part
+    files) through :func:`read_parquet`."""
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")[1]

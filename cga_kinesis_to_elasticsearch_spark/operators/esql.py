@@ -3064,12 +3064,19 @@ def _apply_stage(
             raise ValueError(
                 f'ES|QL GROK needs: field "pattern" — got {arg!r}'
             )
-        from ..grok import default_grok, grok_columns
+        from ..grok import default_grok, grok_schema, grok_struct
 
         g = default_grok()
         g.add_pattern("__ESQL__", gm.group(2))
+        # a row the pattern does not match gets NULL in every field,
+        # as ES|QL appends nulls for it
+        parsed = grok_struct(g, gm.group(1), "__ESQL__", null_on_nonmatch=True)
         df = df.select(
-            "*", *grok_columns(g, gm.group(1), "__ESQL__")
+            "*",
+            *[
+                parsed.getField(f.name).alias(f.name)
+                for f in grok_schema(g, "__ESQL__").fields
+            ],
         )
     elif cmd == "ENRICH":
         # ENRICH policy ON key [WITH f1, f2] — ES|QL's lookup

@@ -49,15 +49,6 @@ class PipelineConfig:
 
     allowed_origins: list[str] = field(default_factory=lambda: ["env1", "env2"])
     enable_disabled_routes: bool = False
-    # Composable document-level enrichments applied AFTER the parity
-    # columns are final (each takes and returns the documents frame) —
-    # how UA classification (operators/useragent.py over
-    # parsed_routeraccess.rtr_http_user_agent), CIDR lookup
-    # (operators/iplookup.py over rtr_src_host) or custom computed
-    # columns join the production path without forking the pipeline.
-    # Default empty: the parity output is byte-identical to the
-    # reference mapping.
-    post_stages: tuple = ()
 
 
 def run_pipeline(
@@ -146,7 +137,4 @@ def run_pipeline(
     )
     parsed_cols = [f"parsed_{p.lower()}" for p in patterns_in_use]
     quoted = [f"`{c}`" if "." in c else c for c in DOC_COLUMNS]
-    df = df.select(*quoted, *parsed_cols, "arrival_ts", "log_message")
-    for stage in cfg.post_stages:
-        df = stage(df)
-    return df
+    return df.select(*quoted, *parsed_cols, "arrival_ts", "log_message")

@@ -120,8 +120,9 @@ def _protobuf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q("protobuf_jvm_roundtrip", _PROTO_ORACLE)
 def _protobuf_jvm_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME fixture corpus decoded through the decoder the
-    ``StreamConfig.decoder="jvm"`` switch selects
-    (sources/protodesc.select_protobuf_decoder): Spark's JVM
+    ``select_protobuf_decoder(spark, "jvm")`` call selects
+    (sources/protodesc.py; a stream passes its result as
+    ``StreamConfig.decoder``): Spark's JVM
     ``from_protobuf`` against the hand-compiled Envelope descriptor
     set when the optional spark-protobuf module is on the classpath —
     making the parity pipeline 100% codegen, zero Python stages — with

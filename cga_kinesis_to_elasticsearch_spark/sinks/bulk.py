@@ -27,18 +27,21 @@ scans an index whose files all carry keys of one query id as is, and
 drops duplicate doc_ids only in the other indices: those that a second
 checkpoint, an unkeyed ``write`` outside a stream (``replay_errors``) or
 a rewrite (``backfill``, ``compact_index``, ``forget``,
-``update_by_query``) touched.
+``update_by_query``) touched. The read resolves ``data/`` through the
+engine's one resolved-table memo (``io.read_parquet``), whose file
+listing is also what the read rule is decided from: a search over an
+unchanged sink reuses the resolved relation, and any write, replay or
+rewrite changes the listing and resolves it again.
 """
 
 from __future__ import annotations
 
 import json
-import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
 
+from ..io import read_parquet
 from ._swap import decode_part_name, file_key, write_keyed
 
 __all__ = ["to_bulk_actions", "ParquetIndexSink", "DEFAULT_MAPPING"]
@@ -56,10 +59,6 @@ DEFAULT_MAPPING = {
 }
 
 
-# data root -> (listing, the schema Spark inferred for that listing)
-_SCHEMAS: dict[str, tuple[dict, StructType]] = {}
-
-
 def _commit_key(spark: SparkSession) -> str | None:
     """``<query id>.<batch id>`` when called inside a stream's
     micro-batch (Structured Streaming sets both local properties on the
@@ -71,27 +70,9 @@ def _commit_key(spark: SparkSession) -> str | None:
     return f"{query}.{batch}" if query and batch is not None else None
 
 
-def _list_indices(data: Path) -> dict[str, tuple]:
-    """``es_index=`` dir name -> sorted (name, size, mtime) of the data
-    files in it, as Spark sees them (names starting with ``_`` or ``.``
-    are not data)."""
-    out: dict[str, tuple] = {}
-    if not data.is_dir():
-        return out
-    for d in os.scandir(data):
-        if d.is_dir() and d.name.startswith("es_index="):
-            out[d.name] = tuple(sorted(
-                (f.name, st.st_size, st.st_mtime_ns)
-                for f in os.scandir(d.path)
-                if not f.name.startswith(("_", "."))
-                for st in (f.stat(),)
-            ))
-    return out
-
-
-def _single_stream(files: tuple) -> bool:
+def _single_stream(names: list[str]) -> bool:
     """Whether every file was committed by one stream query."""
-    keys = {file_key(name) for name, _, _ in files}
+    keys = {file_key(name) for name in names}
     return None not in keys and len({k.rpartition(".")[0] for k in keys}) <= 1
 
 
@@ -232,31 +213,31 @@ class ParquetIndexSink:
         """Read documents back, each doc_id once (the ES
         overwrite-by-_id semantics, T1).
 
-        Read rule, from one driver-side listing of ``data/es_index=*/``:
-        an index whose files all carry commit keys of one stream query
+        Read rule, from the listing of ``data/`` that the engine's
+        resolved-table memo (``io.read_parquet``) checks anyway: an
+        index whose files all carry commit keys of one stream query
         holds each doc_id once (module docstring) and is scanned as is;
         every other index goes through ``dropDuplicates(["doc_id"])``
         over its own rows only, which is exact because a doc_id always
-        routes to one index. The scan takes the schema Spark inferred
-        for the same listing before (``_SCHEMAS``), so an unchanged
-        sink is read without the footer-inference job."""
-        data = self.root / "data"
-        listing = _list_indices(data)
-        memo = _SCHEMAS.get(str(data))
-        if memo is None or memo[0] != listing:
-            memo = (listing, spark.read.parquet(str(data)).schema)
-            _SCHEMAS[str(data)] = memo
-        df = spark.read.schema(memo[1]).parquet(str(data))
+        routes to one index. While the listing is unchanged the memo
+        returns the frame it resolved before, so an unchanged sink is
+        read without listing it again in Spark or running the
+        footer-inference job."""
+        files, df = read_parquet(spark, str(self.root / "data"))
+        by_index: dict[str, list[str]] = {}
+        for rel, _, _ in files:
+            index_dir, _, name = rel.partition("/")
+            by_index.setdefault(index_dir, []).append(name)
         if pattern is not None:
             df = df.filter(F.col("es_index").rlike(pattern))
         mixed = [
-            decode_part_name(name)[1]
-            for name, files in listing.items()
-            if not _single_stream(files)
+            decode_part_name(index_dir)[1]
+            for index_dir, names in by_index.items()
+            if not _single_stream(names)
         ]
         if not mixed:
             return df
-        if len(mixed) == len(listing):
+        if len(mixed) == len(by_index):
             return df.dropDuplicates(["doc_id"])
         # never NULL, so the two branches split the rows exactly
         in_mixed = F.coalesce(F.col("es_index").isin(mixed), F.lit(False))

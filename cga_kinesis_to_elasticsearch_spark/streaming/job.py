@@ -131,26 +131,30 @@ class StreamConfig:
     days_to_keep: int = 3  # DAYS_TO_KEEP, main.go:553
     retention_every_batches: int = 0  # 0 = off; reference runs 24-hourly
     # Payload decoder: raw records -> RECORD_SCHEMA + decode_error.
-    # None/"json" = the from_json stand-in; "arrow" = the Arrow-batched
-    # protobuf wire codec (sources/protowire.py); "jvm" = Spark's
-    # from_protobuf against the compiled Envelope descriptor
-    # (sources/protodesc.py) — 100% codegen, falling back LOUDLY to
-    # "arrow" when the optional spark-protobuf module is absent. A
-    # callable is used as-is.
-    decoder: Callable[[DataFrame], DataFrame] | str | None = None
+    # Default: the from_json stand-in (sources/records.py); the
+    # Arrow-batched protobuf wire codec is
+    # sources/protowire.decode_protobuf_records, and Spark's
+    # from_protobuf against the compiled Envelope descriptor is
+    # sources/protodesc.select_protobuf_decoder(spark, "jvm") — 100%
+    # codegen, falling back LOUDLY to the Arrow codec when the
+    # optional spark-protobuf module is absent.
+    decoder: Callable[[DataFrame], DataFrame] = decode_records
     # The micro-batch's optional work, as two ordered stage tuples that
-    # the runner in run_stream applies around the sink write (the same
-    # shape as PipelineConfig.post_stages). The runner owns caching:
-    # every frame a stage receives is persisted by the runner and
-    # released when the batch ends; stages persist nothing themselves.
+    # the runner in run_stream applies around the sink write. The
+    # runner owns caching: every frame a stage receives is persisted by
+    # the runner and released when the batch ends; stages persist
+    # nothing themselves.
     #
     # before_write: ``stage(docs) -> docs``, in order, before the
     # touched-index count and the sink write — filters such as the
     # cross-batch exact and near-duplicate indices
     # (sinks/dedupindex.dedup_against_index, then
     # sinks/neardupindex.neardup_against_index; exact first, it is the
-    # cheaper one). ``docs`` are the final documents (log_message and
-    # arrival_ts dropped).
+    # cheaper one), and document-level enrichments such as UA
+    # classification (operators/useragent.py) or an ingest processor
+    # list (operators/ingest.py), which a batch caller applies to
+    # run_pipeline's output instead. ``docs`` are the final documents
+    # (log_message and arrival_ts dropped).
     before_write: tuple[Callable[[DataFrame], DataFrame], ...] = ()
     # after_write: ``stage(docs, touched, batch_id) -> None``, in order,
     # once the batch is written: ``docs`` is the cached written frame,
@@ -184,19 +188,6 @@ def run_before_write(
     return docs
 
 
-def _resolve_decoder(spark: SparkSession, decoder) -> Callable:
-    """Resolve StreamConfig.decoder (callable or "json"/"arrow"/"jvm")
-    to the decode callable, ONCE at job start (the "jvm" probe touches
-    the classpath; see sources/protodesc.select_protobuf_decoder)."""
-    if decoder is None or decoder == "json":
-        return decode_records
-    if callable(decoder):
-        return decoder
-    from ..sources.protodesc import select_protobuf_decoder
-
-    return select_protobuf_decoder(spark, decoder)
-
-
 def run_stream(
     spark: SparkSession,
     raw_stream: DataFrame,
@@ -218,7 +209,6 @@ def run_stream(
         from .metrics_http import MetricsServer
 
         m.http_server = MetricsServer(m, cfg.metrics_listen).start()
-    decode = _resolve_decoder(spark, cfg.decoder)
     if observe_records:
         raw_stream = raw_stream.observe(
             ObservedCounters.OBSERVATION, F.count(F.lit(1)).alias("n")
@@ -238,7 +228,7 @@ def run_stream(
         # the observed metrics ride the STREAMING progress, not the
         # per-batch query, and Observation.get throws (pinned by
         # TestErrorReplay, which runs an all-poison batch).
-        records = decode(raw).persist()
+        records = cfg.decoder(raw).persist()
         held = [records]
         try:
             poison = records.filter(F.col("decode_error"))

@@ -17,7 +17,6 @@ from cga_kinesis_to_elasticsearch_spark.grok import (
     duckdb_exprs,
     grok_columns,
     grok_match,
-    grok_parse_pandas,
     grok_schema,
     grok_struct,
 )
@@ -195,14 +194,6 @@ class TestSparkParity:
         assert [f.name for f in schema.fields][:2] == ["rtr_hostname", "rtr_time"]
         assert schema["rtr_status"].dataType.typeName() == "integer"
         assert schema["rtr_response_time_sec"].dataType.typeName() == "double"
-
-    def test_pandas_single_pass_parity(self, spark, grok):
-        df = spark.createDataFrame([(ROUTER_LINE,), ("garbage",)], ["line"])
-        out = grok_parse_pandas(grok, df, "line", "ROUTERACCESS").orderBy("rtr_status")
-        rows = out.collect()
-        parsed = {k: v for k, v in rows[1].asDict().items() if k != "line"}
-        assert parsed == ROUTER_EXPECTED
-        assert rows[0].rtr_status is None
 
 
 class TestDuckDBParity:

@@ -123,9 +123,10 @@ class TestProcessors:
 
 class TestIngestInPipeline:
     def test_ingest_pipeline_as_post_stage(self, spark):
-        """An ES-style ingest processor list slots into the parity
-        pipeline's composable post_stages hook — the Spark analogue of
-        attaching ?pipeline=... to the bulk request."""
+        """An ES-style ingest processor list is a document stage over
+        the parity pipeline's output (a stream passes it as a
+        before_write stage) — the Spark analogue of attaching
+        ?pipeline=... to the bulk request."""
         from functools import partial
 
         from cga_kinesis_to_elasticsearch_spark.operators.ingest import (
@@ -152,13 +153,12 @@ class TestIngestInPipeline:
             {"uppercase": {"field": "idx_copy"}},
         ]
         stage = partial(apply_ingest_pipeline, processors=processors)
-        docs = run_pipeline(
-            records,
-            dim,
-            PipelineConfig(
-                allowed_origins=ALLOWED_ORIGINS,
-                post_stages=(stage,),
-            ),
+        docs = stage(
+            run_pipeline(
+                records,
+                dim,
+                PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
+            )
         )
         rows = docs.select("es_index", "idx_copy", "ingest_ver").collect()
         assert rows

@@ -1,6 +1,7 @@
-"""Resolved-frame cache gating (io.py): only declared-immutable roots
-are memoized, so a same-application rewrite of any other path can
-never serve a stale file listing (round-6 ADVICE)."""
+"""The resolved-table memo (io.py): a frame is reused exactly while the
+file listing of its path is unchanged, whatever the path, so a
+same-application rewrite can never serve a stale file listing and no
+path has to be declared immutable."""
 
 from __future__ import annotations
 
@@ -15,37 +16,38 @@ def _write_file(path, n):
 
 
 class TestDfCacheGating:
-    def test_mutable_path_not_cached_and_rewrite_visible(
-        self, spark, tmp_path
-    ):
+    def test_unchanged_table_returns_same_frame(self, spark, tmp_path):
+        _write_file(tmp_path / "t.parquet", 3)
+        df1 = eio.load_table(spark, str(tmp_path), "t")
+        df2 = eio.load_table(spark, str(tmp_path), "t")
+        assert df2 is df1  # memoized resolved plan
+        assert df2.count() == 3
+
+    def test_rewrite_in_place_is_resolved_again(self, spark, tmp_path):
         path = tmp_path / "t.parquet"
         _write_file(path, 3)
         df1 = eio.load_table(spark, str(tmp_path), "t")
         assert df1.count() == 3
-        key_hits = [
-            k for k in eio._DF_CACHE if k[1].startswith(str(tmp_path))
-        ]
-        assert not key_hits  # not under an immutable root -> no memo
-        # rewrite in place: a fresh load must see the new listing
+        # rewrite in place, no invalidation call: the changed listing
+        # alone makes the next load resolve the file again
         _write_file(path, 5)
-        assert eio.load_table(spark, str(tmp_path), "t").count() == 5
+        df2 = eio.load_table(spark, str(tmp_path), "t")
+        assert df2 is not df1
+        assert df2.count() == 5
 
-    def test_registered_root_cached_and_invalidate(self, spark, tmp_path):
-        root = tmp_path / "frozen"
-        root.mkdir()
-        path = root / "t.parquet"
-        _write_file(path, 4)
-        eio.register_immutable_root(str(root))
-        try:
-            df1 = eio.load_table(spark, str(root), "t")
-            df2 = eio.load_table(spark, str(root), "t")
-            assert df2 is df1  # memoized resolved plan
-            assert eio.invalidate_cached_tables(str(root)) == 1
-            df3 = eio.load_table(spark, str(root), "t")
-            assert df3 is not df1
-        finally:
-            eio._IMMUTABLE_PREFIXES.remove(str(root))
-            eio.invalidate_cached_tables(str(root))
+    def test_directory_listing_skips_hidden_names(self, spark, tmp_path):
+        table = tmp_path / "t.parquet"
+        table.mkdir()
+        _write_file(table / "part-0.parquet", 2)
+        df1 = eio.load_table(spark, str(tmp_path), "t")
+        # names Spark does not read are not part of the listing
+        (table / "_SUCCESS").touch()
+        (table / ".part-0.parquet.crc").touch()
+        assert eio.load_table(spark, str(tmp_path), "t") is df1
+        _write_file(table / "part-1.parquet", 4)
+        df2 = eio.load_table(spark, str(tmp_path), "t")
+        assert df2 is not df1
+        assert df2.count() == 6
 
     def test_testdata_root_still_cached(self, spark):
         df1 = eio.load_table(spark, "/root/testdata/sf0.001", "region")

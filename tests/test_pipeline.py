@@ -136,21 +136,22 @@ class TestPostStages:
                 "ua",
             )
 
-        docs = run_pipeline(
-            records,
-            dim,
-            PipelineConfig(
-                allowed_origins=ALLOWED_ORIGINS,
-                enable_disabled_routes=True,
-                post_stages=(ua_stage,),
-            ),
+        docs = ua_stage(
+            run_pipeline(
+                records,
+                dim,
+                PipelineConfig(
+                    allowed_origins=ALLOWED_ORIGINS,
+                    enable_disabled_routes=True,
+                ),
+            )
         )
         assert {"ua_family", "ua_major", "ua_is_bot"} <= set(docs.columns)
         fams = {r["ua_family"] for r in docs.select("ua_family").distinct().collect()}
         # fixture UA string is the literal "UA" -> classifies as other
         assert fams == {"other"}
 
-    def test_default_no_post_stages_identical(self, docs):
-        # the parity contract: an empty post_stages tuple leaves the
-        # document schema untouched
+    def test_default_documents_have_no_stage_columns(self, docs):
+        # the parity contract: with no stage applied, the document
+        # schema is untouched
         assert "ua_family" not in docs.columns

@@ -220,18 +220,16 @@ class TestDecoderSwitch:
 
 class TestStreamConfigDecoderString:
     def test_resolve_decoder_strings(self, spark):
+        # the decoder is a callable only: the JSON stand-in by default,
+        # and any other decoder (select_protobuf_decoder(spark, "jvm")
+        # for the JVM route) is passed in and used as-is
         from cga_kinesis_to_elasticsearch_spark.sources.records import (
             decode_records,
         )
         from cga_kinesis_to_elasticsearch_spark.streaming.job import (
-            _resolve_decoder,
+            StreamConfig,
         )
 
-        assert _resolve_decoder(spark, None) is decode_records
-        assert _resolve_decoder(spark, "json") is decode_records
-        assert _resolve_decoder(spark, "arrow") is decode_protobuf_records
-        assert callable(_resolve_decoder(spark, "jvm"))
+        assert StreamConfig().decoder is decode_records
         sentinel = lambda df: df  # noqa: E731
-        assert _resolve_decoder(spark, sentinel) is sentinel
-        with pytest.raises(ValueError):
-            _resolve_decoder(spark, "protobuf-js")
+        assert StreamConfig(decoder=sentinel).decoder is sentinel

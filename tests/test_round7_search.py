@@ -1320,6 +1320,24 @@ class TestEsql:
         ).first()
         assert (out.user, out.verb, out.code) == ("alice", "GET", 200)
 
+    def test_grok_nonmatching_row_is_null(self, spark):
+        from cga_kinesis_to_elasticsearch_spark.operators.esql import (
+            run_esql,
+        )
+
+        df = spark.createDataFrame(
+            [(1, "alice GET 200"), (2, "???")], "id long, line string"
+        )
+        rows = run_esql(
+            'FROM t | GROK line "%{WORD:user} %{WORD:verb} '
+            '%{INT:code:int}" | SORT id | KEEP user, verb, code',
+            {"t": df},
+        ).collect()
+        assert [tuple(r) for r in rows] == [
+            ("alice", "GET", 200),
+            (None, None, None),
+        ]
+
     def test_errors_fail_loud(self, spark):
         from cga_kinesis_to_elasticsearch_spark.operators.esql import (
             run_esql,
