@@ -22,7 +22,7 @@ Equivalent reference behavior: grok Parse/ParseTyped/Match
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import TYPE_CHECKING
 
 from pyspark.sql import Column, functions as F
@@ -46,6 +46,7 @@ __all__ = [
     "grok_schema",
     "grok_parse_into",
     "grok_parse_many",
+    "compile_grok_many",
     "grok_multimap",
     "grok_parse_struct_pandas",
     "grok_parse_auto",
@@ -188,11 +189,26 @@ def grok_parse_many(
     pipeline) and nests 3N projections; batching keeps plan depth and
     analysis cost constant in the number of patterns.
     """
+    return compile_grok_many(grok, col, specs)(df)
+
+
+def compile_grok_many(
+    grok: Grok,
+    col: Column | str,
+    specs: list[tuple[str, "str | CompiledPattern", Column | None]],
+) -> "Callable[[DataFrame], DataFrame]":
+    """``grok_parse_many`` split in two: every Column is built here,
+    once, and the returned ``df -> df`` only issues the projections.
+    A caller that parses many frames with one pattern set (a stream's
+    micro-batches) compiles once; each expression costs several py4j
+    round trips to build. The helper columns are dropped by name, so
+    the input's own columns are never re-selected one by one."""
     line = F.col(col) if isinstance(col, str) else col
-    base_cols = list(df.columns)
-    raws, arrs, structs = [], [], []
+    raws, arrs, structs, helpers = [], [], [], []
     for out_col, pattern, condition in specs:
         cp = _resolve(grok, pattern)
+        raw_col, arr_col = f"__graw_{out_col}", f"__garr_{out_col}"
+        helpers += [raw_col, arr_col]
         # Reluctant prefix = leftmost match, same as an unanchored
         # search; (?s) keeps the wrapper safe for embedded newlines.
         wrapped = "(?s)^.*?(?:" + cp.regex + ").*$"
@@ -200,32 +216,29 @@ def grok_parse_many(
         raw = F.regexp_replace(_sanitize(line), wrapped, repl)
         if condition is not None:
             raw = F.when(condition, raw)
-        raws.append(raw.alias(f"__graw_{out_col}"))
+        raws.append(raw.alias(raw_col))
         arrs.append(
             F.when(
-                F.col(f"__graw_{out_col}").startswith(_SENTINEL),
-                F.split(
-                    F.expr(f"substring(__graw_{out_col}, 2)"), _SEP, -1
-                ),
-            ).alias(f"__garr_{out_col}")
+                F.col(raw_col).startswith(_SENTINEL),
+                F.split(F.expr(f"substring({raw_col}, 2)"), _SEP, -1),
+            ).alias(arr_col)
         )
+        arr = F.col(arr_col)
         fields = []
         for i, c in enumerate(cp.fields):
-            e = F.element_at(F.col(f"__garr_{out_col}"), i + 1)
+            e = F.element_at(arr, i + 1)
             if c.type == "int":
                 e = e.try_cast("int")
             elif c.type == "float":
                 e = e.try_cast("double")
             fields.append(e.alias(c.name))
-        structs.append(
-            F.when(
-                F.col(f"__garr_{out_col}").isNotNull(), F.struct(*fields)
-            ).alias(out_col)
-        )
-    df = df.select("*", *raws)
-    df = df.select("*", *arrs)
-    quoted = [F.col(f"`{c}`") for c in base_cols]
-    return df.select(*quoted, *structs)
+        structs.append(F.when(arr.isNotNull(), F.struct(*fields)).alias(out_col))
+
+    def apply(df: "DataFrame") -> "DataFrame":
+        df = df.select("*", *raws).select("*", *arrs)
+        return df.select("*", *structs).drop(*helpers)
+
+    return apply
 
 
 def grok_multimap(

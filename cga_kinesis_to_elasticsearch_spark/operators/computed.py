@@ -11,31 +11,24 @@ the index of their arrival day by design.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-__all__ = ["with_computed_columns", "es_index_name"]
-
-
-def es_index_name(class_col: str = "index_class", date_col: str = "event_date"):
-    """index = `{class}-{YYYY-MM-DD}` (P1)."""
-    return F.concat_ws("-", F.col(class_col), F.col(date_col))
+__all__ = ["computed_columns"]
 
 
-def with_computed_columns(df: DataFrame) -> DataFrame:
-    """Add event_date, es_index, timestamp (epoch millis of arrival),
-    file_path, @cf.env. Requires arrival_ts, index_class, origin,
-    log_message."""
-    # one withColumns call (vs a 5-deep withColumn chain: one analyzer
-    # pass instead of five); es_index's event_date dependency is inlined
-    # because withColumns resolves every expression against the input
+def computed_columns() -> dict[str, Column]:
+    """event_date, es_index, timestamp (epoch millis of arrival),
+    file_path and @cf.env by name, for ONE ``withColumns`` (vs a 5-deep
+    withColumn chain: one analyzer pass instead of five). Requires
+    arrival_ts, index_class, origin, log_message. es_index's event_date
+    dependency is inlined because withColumns resolves every
+    expression against the input."""
     event_date = F.date_format("arrival_ts", "yyyy-MM-dd")
-    return df.withColumns(
-        {
-            "event_date": event_date,
-            "es_index": F.concat_ws("-", F.col("index_class"), event_date),
-            # UnixNano()/1e6 == unix_millis (main.go:438)
-            "timestamp": F.unix_millis("arrival_ts"),
-            "file_path": F.col("log_message.source_instance"),
-            "@cf.env": F.col("origin"),
-        }
-    )
+    return {
+        "event_date": event_date,
+        "es_index": F.concat_ws("-", F.col("index_class"), event_date),
+        # UnixNano()/1e6 == unix_millis (main.go:438)
+        "timestamp": F.unix_millis("arrival_ts"),
+        "file_path": F.col("log_message.source_instance"),
+        "@cf.env": F.col("origin"),
+    }

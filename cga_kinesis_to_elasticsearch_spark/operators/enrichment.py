@@ -31,10 +31,12 @@ Observable semantics reproduced:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 
-__all__ = ["strip_app_suffixes", "flatten_dimensions", "enrich"]
+__all__ = ["strip_app_suffixes", "flatten_dimensions", "compile_enrich"]
 
 APP_NAME_SUFFIXES = ("-venerable", "-blue", "-green")  # main.go:104
 
@@ -122,57 +124,43 @@ def flatten_dimensions(
     return dim
 
 
-def enrich(
-    stream: DataFrame,
-    dim: DataFrame,
-    allowed_origins: list[str],
-    app_guid: Column | None = None,
-) -> DataFrame:
-    """J1: broadcast left-outer equi join adding the six @cf.* columns.
+def compile_enrich(
+    allowed_origins: list[str], app_guid: Column | None = None
+) -> tuple[Callable[[DataFrame, DataFrame], DataFrame], dict[str, Column]]:
+    """J1: the broadcast left-outer equi join adding the six @cf.*
+    columns, every Column built here, once. ``join(stream, dim)`` only
+    issues the join (a stream joins a fresh dimension snapshot every
+    micro-batch, under one unchanged set of expressions); the six
+    @cf.* columns by name read its output, and the caller selects them
+    in its own final projection (pipeline.compile_pipeline), which
+    also leaves the dimension's columns behind.
 
     ``app_guid`` defaults to coalesce(log_message.app_id, '') — pass
     coalesce with the rtr_app_id capture when the ROUTERACCESS route is
-    live (key choice, main.go:414-424).
-    """
+    live (key choice, main.go:414-424)."""
     if app_guid is None:
         app_guid = F.coalesce(F.col("log_message.app_id"), F.lit(""))
     origin_known = F.col("origin").isin(list(allowed_origins))
-
-    joined = stream.withColumn("__app_guid", app_guid).join(
-        broadcast(dim.withColumnRenamed("env", "__dim_env")),
-        (F.col("origin") == F.col("__dim_env"))
-        & (F.lower(F.col("__app_guid")) == F.col("guid_lc")),
-        "left",
+    on = (F.col("origin") == F.col("__dim_env")) & (
+        F.lower(app_guid) == F.col("guid_lc")
     )
 
-    def tolerated(col: Column) -> Column:
+    def tolerated(col: str) -> Column:
         # known origin: missing dim row degrades to '' (J3);
         # unknown origin: NULL (enrichment skipped entirely, J4)
-        return F.when(origin_known, F.coalesce(col, F.lit("")))
+        return F.when(origin_known, F.coalesce(F.col(col), F.lit("")))
 
-    out = (
-        # one withColumns call: six independent projections, one
-        # analyzer pass (a withColumn chain costs one pass each)
-        joined.withColumns(
-            {
-                "@cf.app": tolerated(F.col("app_name")),
-                "@cf.app_id": F.when(origin_known, F.col("__app_guid")),
-                "@cf.space": tolerated(F.col("space_name")),
-                "@cf.space_id": tolerated(F.col("space_guid")),
-                "@cf.org": tolerated(F.col("org_name")),
-                "@cf.org_id": tolerated(F.col("org_guid")),
-            }
-        )
-        .drop(
-            "__app_guid",
-            "__dim_env",
-            "guid_lc",
-            "app_name",
-            "space_guid",
-            "space_name",
-            "org_guid",
-            "org_name",
-            "ignored_app",
-        )
-    )
-    return out
+    cols = {
+        "@cf.app": tolerated("app_name"),
+        "@cf.app_id": F.when(origin_known, app_guid),
+        "@cf.space": tolerated("space_name"),
+        "@cf.space_id": tolerated("space_guid"),
+        "@cf.org": tolerated("org_name"),
+        "@cf.org_id": tolerated("org_guid"),
+    }
+
+    def join(stream: DataFrame, dim: DataFrame) -> DataFrame:
+        renamed = dim.withColumnRenamed("env", "__dim_env")
+        return stream.join(broadcast(renamed), on, "left")
+
+    return join, cols

@@ -13,13 +13,21 @@ Structured Streaming (narrow ops only — no shuffle at any scale).
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..schemas import EVENT_TYPE_LOG_MESSAGE
 
-__all__ = ["Route", "ROUTE_TABLE", "filter_log_messages", "route", "filter_identifiable"]
+__all__ = [
+    "Route",
+    "ROUTE_TABLE",
+    "is_log_message",
+    "filter_log_messages",
+    "compile_route",
+    "filter_identifiable",
+]
 
 
 @dataclass(frozen=True)
@@ -33,7 +41,7 @@ class Route:
 
 # Order matters: first match wins, like the Go switch.
 ROUTE_TABLE: tuple[tuple[str, Route], ...] = (
-    # (condition key, route) — conditions built in route() below
+    # (condition key, route) — conditions built in _conditions() below
     ("var_log_prefix", Route("linux_logs", "GENERIC", False)),  # main.go:367
     ("gorouter_access_log", Route("gorouter_access", "ROUTERACCESS", False)),  # :374
     ("director_log", Route("bosh_director", "GENERIC", False)),  # :381
@@ -45,13 +53,18 @@ ROUTE_TABLE: tuple[tuple[str, Route], ...] = (
 DROP = "__drop__"
 
 
+def is_log_message() -> Column:
+    """F1's predicate: the envelope is a LogMessage (main.go:362-364)."""
+    return F.col("event_type") == EVENT_TYPE_LOG_MESSAGE
+
+
 def filter_log_messages(df: DataFrame) -> DataFrame:
     """F1: keep only LogMessage envelopes; everything else silently
     dropped (main.go:362-364)."""
-    return df.filter(F.col("event_type") == EVENT_TYPE_LOG_MESSAGE)
+    return df.filter(is_log_message())
 
 
-def _conditions(df: DataFrame) -> dict[str, Column]:
+def _conditions() -> dict[str, Column]:
     src = F.coalesce(F.col("log_message.source_instance"), F.lit(""))
     return {
         "var_log_prefix": src.startswith("/var/log/"),
@@ -64,11 +77,15 @@ def _conditions(df: DataFrame) -> dict[str, Column]:
     }
 
 
-def route(df: DataFrame, enable_disabled_routes: bool = False) -> DataFrame:
-    """F2: add ``index_class`` + ``grok_pattern`` columns via the switch
-    ladder, then drop non-routed rows. A disabled route drops the row
-    (returns nil in the reference) unless resurrected."""
-    conds = _conditions(df)
+def compile_route(
+    enable_disabled_routes: bool = False,
+) -> Callable[[DataFrame], DataFrame]:
+    """F2 as a ``df -> df`` whose Columns are built here, once: the
+    returned function adds ``index_class`` + ``grok_pattern`` via the
+    switch ladder (one withColumns), then drops non-routed rows (one
+    filter). A disabled route drops the row (returns nil in the
+    reference) unless resurrected."""
+    conds = _conditions()
     class_col: Column = F.lit(DROP)
     pattern_col: Column = F.lit(None).cast("string")
     # Build when/otherwise bottom-up so the FIRST condition wins.
@@ -82,8 +99,9 @@ def route(df: DataFrame, enable_disabled_routes: bool = False) -> DataFrame:
         ).otherwise(pattern_col)
     # one withColumns call: each withColumn costs a full analyzer pass
     # plus py4j round trips, and the route expressions are independent
-    out = df.withColumns({"index_class": class_col, "grok_pattern": pattern_col})
-    return out.filter(F.col("index_class") != DROP)
+    cols = {"index_class": class_col, "grok_pattern": pattern_col}
+    routed = F.col("index_class") != DROP
+    return lambda df: df.withColumns(cols).filter(routed)
 
 
 def filter_identifiable(df: DataFrame, rtr_app_id: Column | None = None) -> DataFrame:

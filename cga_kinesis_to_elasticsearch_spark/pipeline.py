@@ -8,22 +8,25 @@ plan survives a 100x scale-up because the only wide dependency is the
 broadcast of a small dimension snapshot.
 
 Runs identically in batch (DuckDB-oracle testable) and inside a
-Structured Streaming micro-batch (streaming/job.py wraps it).
+Structured Streaming micro-batch: ``compile_pipeline`` builds the plan's
+expressions once, and streaming/job.py applies the compiled pipeline to
+every micro-batch; ``run_pipeline`` is compile-then-apply.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
 from .grok import Grok, default_grok
-from .grok.spark import grok_parse_many
-from .operators.computed import with_computed_columns
-from .operators.enrichment import enrich
-from .operators.routing import ROUTE_TABLE, filter_log_messages, route
+from .grok.spark import compile_grok_many
+from .operators.computed import computed_columns
+from .operators.enrichment import compile_enrich
+from .operators.routing import ROUTE_TABLE, compile_route, is_log_message
 
-__all__ = ["PipelineConfig", "run_pipeline", "DOC_COLUMNS"]
+__all__ = ["PipelineConfig", "run_pipeline", "compile_pipeline", "DOC_COLUMNS"]
 
 # Stable output column order for the document (SURVEY §1.1 'Document').
 DOC_COLUMNS = [
@@ -67,11 +70,24 @@ def run_pipeline(
     T1; md5 because every engine in the verification chain has it,
     and 128 bits is already far past collision concern for ids).
     """
+    return compile_pipeline(config, grok)(records, dim)
+
+
+def compile_pipeline(
+    config: PipelineConfig | None = None, grok: Grok | None = None
+) -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """``run_pipeline`` split in two: compile builds every Column of the
+    plan here, once, and the returned ``(records, dim) -> documents``
+    only issues the DataFrame ops. A stream compiles once and applies
+    the result to every micro-batch (streaming/job.py): each Column
+    costs several py4j round trips to build, 1,200-2,000 per pipeline
+    (by route set), while an apply issues about 80."""
     cfg = config or PipelineConfig()
     g = grok or default_grok()
 
     # F1 -> F2: filter to LogMessage, then the route switch.
-    df = route(filter_log_messages(records), cfg.enable_disabled_routes)
+    log_only = is_log_message()
+    route = compile_route(cfg.enable_disabled_routes)
 
     # G4/G5: one struct column per pattern in use; rows routed to a
     # different pattern carry NULL. The pattern set is static at plan
@@ -83,13 +99,11 @@ def run_pipeline(
             if r.enabled or cfg.enable_disabled_routes
         }
     )
-    line = F.col("log_message.message")
     # single-pass parse (one regex eval/row, grok_parse_many) gated per
     # row on the pattern the route switch assigned; 3 projections total
-    df = grok_parse_many(
+    parse = compile_grok_many(
         g,
-        df,
-        line,
+        F.col("log_message.message"),
         [
             (f"parsed_{p.lower()}", p, F.col("grok_pattern") == p)
             for p in patterns_in_use
@@ -104,10 +118,10 @@ def run_pipeline(
         if "ROUTERACCESS" in patterns_in_use
         else F.lit("")
     )
-    app_guid = F.when(
-        F.coalesce(F.col("log_message.app_id"), F.lit("")) != "",
-        F.col("log_message.app_id"),
-    ).otherwise(F.coalesce(rtr, F.lit("")))
+    has_app_id = F.coalesce(F.col("log_message.app_id"), F.lit("")) != ""
+    app_guid = F.when(has_app_id, F.col("log_message.app_id")).otherwise(
+        F.coalesce(rtr, F.lit(""))
+    )
     # The filter deliberately tests struct NULLness, not the rtr_app_id
     # field: ROUTERACCESS captures app_id as \S+ (main.go:562), so the
     # capture is non-empty exactly when the pattern matched, and
@@ -116,25 +130,32 @@ def run_pipeline(
     # struct FIELD re-inlines the whole parse chain (regex re-evaluated
     # ~4x per row inside the Filter); the NULL test inlines only the
     # sentinel startswith — measured 1.6x on the full pipeline.
-    rtr_present = (
-        F.col("parsed_routeraccess").isNotNull()
+    identifiable = (
+        has_app_id | F.col("parsed_routeraccess").isNotNull()
         if "ROUTERACCESS" in patterns_in_use
-        else F.lit(False)
-    )
-    df = df.filter(
-        (F.coalesce(F.col("log_message.app_id"), F.lit("")) != "") | rtr_present
+        else has_app_id
     )
 
     # J1-J4: broadcast enrichment join.
-    df = enrich(df, dim, cfg.allowed_origins, app_guid=app_guid)
+    join, enriched = compile_enrich(cfg.allowed_origins, app_guid=app_guid)
 
-    # Computed columns + P1 routing key.
-    df = with_computed_columns(df)
-
-    # T1: deterministic doc id -> replays overwrite instead of duplicate.
-    df = df.withColumn(
-        "doc_id", F.md5(F.concat_ws("|", "shard_id", "sequence_number"))
-    )
+    # ONE final projection: the document columns, including the @cf.*
+    # enrichment, the computed columns + P1 routing key and T1's
+    # deterministic doc id (replays overwrite instead of duplicate);
+    # one analyzer pass instead of a withColumns/drop chain
+    projected = {
+        **enriched,
+        **computed_columns(),
+        "doc_id": F.md5(F.concat_ws("|", "shard_id", "sequence_number")),
+    }
     parsed_cols = [f"parsed_{p.lower()}" for p in patterns_in_use]
-    quoted = [f"`{c}`" if "." in c else c for c in DOC_COLUMNS]
-    return df.select(*quoted, *parsed_cols, "arrival_ts", "log_message")
+    out = [
+        projected[c].alias(c) if c in projected else F.col(f"`{c}`")
+        for c in [*DOC_COLUMNS, *parsed_cols, "arrival_ts", "log_message"]
+    ]
+
+    def apply(records: DataFrame, dim: DataFrame) -> DataFrame:
+        df = parse(route(records.filter(log_only))).filter(identifiable)
+        return join(df, dim).select(*out)
+
+    return apply

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..io import read_parquet
 from ._swap import decode_part_name, file_key, write_keyed
 
-__all__ = ["to_bulk_actions", "ParquetIndexSink", "DEFAULT_MAPPING"]
+__all__ = ["to_bulk_actions", "ParquetIndexSink", "DEFAULT_MAPPING", "write_poison"]
 
 # main.go:306-320 — the dynamic mapping applied to every new index.
 DEFAULT_MAPPING = {
@@ -74,6 +74,38 @@ def _single_stream(names: list[str]) -> bool:
     """Whether every file was committed by one stream query."""
     keys = {file_key(name) for name in names}
     return None not in keys and len({k.rpartition(".")[0] for k in keys}) <= 1
+
+
+def _one_partition(df: DataFrame) -> bool:
+    """Whether ``df`` is a ``coalesce(1)``/``repartition(1)`` of its
+    input (the root of its logical plan; three py4j calls, no
+    planning): the caller has already laid it out as one task."""
+    plan = df._jdf.queryExecution().logical()
+    return plan.nodeName() == "Repartition" and plan.numPartitions() == 1
+
+
+def _commit(df: DataFrame, root: Path, part_col: str) -> None:
+    """Inside a micro-batch, a keyed commit (``_swap.write_keyed``);
+    outside a stream there is no key, and ``df`` is appended."""
+    key = _commit_key(df.sparkSession)
+    if key is not None:
+        write_keyed(df, root, part_col, key)
+    else:
+        df.write.mode("append").partitionBy(part_col).parquet(str(root))
+
+
+def write_poison(poison: DataFrame, root: Path, batch_id: int) -> None:
+    """The poison bucket of both sinks (T2): ``poison`` lands under
+    ``<root>/batch_id=<n>/``, committed like ``ParquetIndexSink.write``
+    (a replayed batch replaces its own poison rows, and batch 0 of a
+    fresh checkpoint, another query id, adds to the old batch 0).
+
+    The batch id goes in as a STRING literal: Spark passes a string
+    literal to generated code by reference, while an integer literal is
+    inlined into the Java source, so every batch compiled a new class.
+    The directory name and the inferred integer ``batch_id`` on read
+    are the same either way."""
+    _commit(poison.withColumn("batch_id", F.lit(str(batch_id))), root, "batch_id")
 
 
 def to_bulk_actions(docs: DataFrame) -> DataFrame:
@@ -167,36 +199,28 @@ class ParquetIndexSink:
         # ceil(max_rows / TARGET_FILE_ROWS) ways, capped at WRITE_SALT
         # — small batches write ONE file per index instead of 8 tiny
         # ones, production-size batches keep the full fan-out.
+        #
+        # A frame the caller already laid out as ONE partition, whose
+        # indices each fit one file, is written as is: no shuffle, one
+        # task that writes every index the frame holds in turn (the 2x
+        # case above), so a caller collapses a frame only when it holds
+        # ONE index. The stream runner does so for a one-index batch of
+        # its cached docs.
         par = docs.sparkSession.sparkContext.defaultParallelism
         n_salt = self.WRITE_SALT
         if max_rows_per_index is not None:
             need = -(-int(max_rows_per_index) // self.TARGET_FILE_ROWS)
             n_salt = max(1, min(self.WRITE_SALT, need))
-        salt = F.pmod(F.xxhash64("doc_id"), F.lit(n_salt))
-        self._commit(
-            docs.repartition(par, F.col("es_index"), salt), "data", "es_index"
-        )
+        if n_salt > 1 or not _one_partition(docs):
+            salt = F.pmod(F.xxhash64("doc_id"), F.lit(n_salt))
+            docs = docs.repartition(par, F.col("es_index"), salt)
+        _commit(docs, self.root / "data", "es_index")
 
     def write_errors(self, poison: DataFrame, batch_id: int) -> None:
         """T2: corrupt records land here with their raw bytes intact —
         replayable once the bug is fixed, unlike the reference's
-        skip-on-restart which loses them. Committed like ``write``: a
-        replayed batch replaces its own poison rows, and batch 0 of a
-        fresh checkpoint (another query id) adds to the old batch 0."""
-        self._commit(
-            poison.withColumn("batch_id", F.lit(batch_id)), "_errors", "batch_id"
-        )
-
-    def _commit(self, df: DataFrame, table: str, part_col: str) -> None:
-        """Inside a micro-batch, a keyed commit (``_swap.write_keyed``);
-        outside a stream there is no key, and ``df`` is appended."""
-        key = _commit_key(df.sparkSession)
-        if key is not None:
-            write_keyed(df, self.root / table, part_col, key)
-        else:
-            df.write.mode("append").partitionBy(part_col).parquet(
-                str(self.root / table)
-            )
+        skip-on-restart which loses them (``write_poison``)."""
+        write_poison(poison, self.root / "_errors", batch_id)
 
     # -- read-back / verification --------------------------------------
     def indices(self) -> list[str]:

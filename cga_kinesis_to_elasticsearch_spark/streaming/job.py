@@ -19,8 +19,31 @@ Streaming:
   exposed in Prometheus text format (K5)
 
 Everything inside ``foreachBatch`` is the SAME pure batch code the
-DuckDB oracle checks (pipeline.run_pipeline) — batch/stream parity by
-construction.
+DuckDB oracle checks — batch/stream parity by construction:
+``run_stream`` compiles the pipeline once (``pipeline.compile_pipeline``)
+before the query starts, and ``run_pipeline`` is that same compile
+followed by one apply.
+
+One micro-batch, in order (each Spark job is described by its stage's
+name, under the stream's job group):
+
+1. decode the raw records and cache them; apply the compiled pipeline
+   (DataFrame ops only: no expression is built per batch, so every
+   batch plans the same query and its generated classes come from the
+   codegen cache);
+2. ``before_write`` stages, each over a cached input
+   (``before_write:<name>``);
+3. ``count``: cache the final docs and run ONE per-index aggregation
+   (touched indices, sent counter, file fan-out);
+4. ``poison`` (a pool thread, over the cached records) alongside
+   ``write``: a one-index batch that fits one file is written from one
+   partition of the cached docs, with no shuffle;
+5. ``after_write`` stages (``after_write:<name>``);
+6. ``errors``: the poison rows, one file from the cached records.
+
+With a cached dimension snapshot and the parquet sink, a steady-state
+batch compiles no new class and runs 9 jobs when it holds one index
+(10 over several indices, whose write keeps the salted shuffle).
 """
 
 from __future__ import annotations
@@ -33,7 +56,7 @@ from typing import Callable
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..pipeline import PipelineConfig, run_pipeline
+from ..pipeline import PipelineConfig, compile_pipeline
 from ..sinks.bulk import ParquetIndexSink
 from ..sources.records import decode_records
 
@@ -44,6 +67,9 @@ __all__ = [
     "run_before_write",
     "run_stream",
 ]
+
+# the local property a job's description is read from
+_DESCRIPTION = "spark.job.description"
 
 
 class ObservedCounters:
@@ -169,6 +195,13 @@ class StreamConfig:
     after_write: tuple[Callable[[DataFrame, list, int], None], ...] = ()
 
 
+def _stage_name(stage: Callable) -> str:
+    """A stage callable's name, as its jobs are described: the function
+    name, seen through ``functools.partial``."""
+    fn = getattr(stage, "func", stage)
+    return getattr(fn, "__name__", type(fn).__name__)
+
+
 def run_before_write(
     docs: DataFrame,
     stages: tuple[Callable[[DataFrame], DataFrame], ...],
@@ -181,10 +214,20 @@ def run_before_write(
     stage's index update is its own action, and the next action
     re-reads the cache instead of re-running grok/enrichment or the
     previous index join. The stream and the backfill job
-    (sinks/backfill.py) both run their stages through here."""
-    for stage in stages:
-        held.append(docs.persist())
-        docs = stage(docs)
+    (sinks/backfill.py) both run their stages through here. The jobs a
+    stage starts are described ``before_write:<stage name>``; the
+    caller's job description comes back afterwards."""
+    if not stages:
+        return docs
+    sc = docs.sparkSession.sparkContext
+    described = sc.getLocalProperty(_DESCRIPTION)
+    try:
+        for stage in stages:
+            held.append(docs.persist())
+            sc.setJobDescription(f"before_write:{_stage_name(stage)}")
+            docs = stage(docs)
+    finally:
+        sc.setJobDescription(described)
     return docs
 
 
@@ -214,6 +257,14 @@ def run_stream(
             ObservedCounters.OBSERVATION, F.count(F.lit(1)).alias("n")
         )
     batch_counter = {"n": 0}
+    sc = spark.sparkContext
+    # Every expression of the batch plan is built here, once: the
+    # micro-batch only issues DataFrame ops, so each batch's plan is
+    # the same plan over new data.
+    pipeline = compile_pipeline(cfg.pipeline)
+    is_poison = F.col("decode_error")
+    is_good = ~is_poison
+    per_index = F.count(F.lit(1)).alias("__n")
 
     def process_batch(raw: DataFrame, batch_id: int) -> None:
         # The runner owns every cache of the batch: the decoded records
@@ -228,14 +279,13 @@ def run_stream(
         # the observed metrics ride the STREAMING progress, not the
         # per-batch query, and Observation.get throws (pinned by
         # TestErrorReplay, which runs an all-poison batch).
+        described = sc.getLocalProperty(_DESCRIPTION)
         records = cfg.decoder(raw).persist()
         held = [records]
         try:
-            poison = records.filter(F.col("decode_error"))
-            good = records.filter(~F.col("decode_error")).drop(
-                "decode_error", "data"
-            )
-            docs = run_pipeline(good, dim_provider(spark), cfg.pipeline)
+            poison = records.filter(is_poison)
+            good = records.filter(is_good).drop("decode_error", "data")
+            docs = pipeline(good, dim_provider(spark))
             docs = docs.drop("log_message", "arrival_ts")
             docs = run_before_write(docs, cfg.before_write, held)
             # the count, the sink write and the after_write stages all
@@ -243,35 +293,55 @@ def run_stream(
             held.append(docs.persist())
             # ONE aggregation serves the touched-index set, the sent
             # counter and the sink's file fan-out
-            idx_counts = (
-                docs.groupBy("es_index")
-                .agg(F.count(F.lit(1)).alias("__n"))
-                .collect()
-            )
+            sc.setJobDescription("count")
+            idx_counts = docs.groupBy("es_index").agg(per_index).collect()
             touched = [r["es_index"] for r in idx_counts]
+            total = sum(r["__n"] for r in idx_counts)
             sink.ensure_indices(touched)
             # the poison count only reads the populated records cache —
             # submit it concurrently so it back-fills the sink write's
             # task tail (guide §2.6) instead of running as its own
             # serial job afterwards; the wrapper hands this thread's job
-            # group and local properties to the pool thread
+            # group and local properties (the description included) to
+            # the pool thread
+            sc.setJobDescription("poison")
             count_poison = inheritable_thread_target(spark)(poison.count)
+            # a one-index batch that fits one file goes to the parquet
+            # sink as ONE partition of the cached docs, which the sink
+            # writes with no shuffle (ParquetIndexSink.write); only this
+            # cached frame is collapsed, never the upstream decode and
+            # pipeline work, and a batch over several indices keeps one
+            # writing task per index
+            written = docs
+            if (
+                isinstance(sink, ParquetIndexSink)
+                and len(touched) == 1
+                and total <= sink.TARGET_FILE_ROWS
+            ):
+                written = docs.coalesce(1)
             with ThreadPoolExecutor(max_workers=1) as pool:
                 poison_fut = pool.submit(count_poison)
+                sc.setJobDescription("write")
                 sink.write(
-                    docs,
+                    written,
                     max_rows_per_index=max(
                         (r["__n"] for r in idx_counts), default=0
                     ),
                 )
                 n_poison = poison_fut.result()
-            m.sent_count += sum(r["__n"] for r in idx_counts)
+            m.sent_count += total
             for stage in cfg.after_write:
+                sc.setJobDescription(f"after_write:{_stage_name(stage)}")
                 stage(docs, touched, batch_id)
             if n_poison:
-                sink.write_errors(poison.drop("decode_error"), batch_id)
+                # one file, from the cached records
+                sc.setJobDescription("errors")
+                sink.write_errors(
+                    poison.drop("decode_error").coalesce(1), batch_id
+                )
                 m.errors_count += n_poison
         finally:
+            sc.setJobDescription(described)
             for df in held:
                 df.unpersist()
         batch_counter["n"] += 1

@@ -41,7 +41,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import EngineConfig
-from ..sinks.bulk import DEFAULT_MAPPING
+from ..sinks.bulk import DEFAULT_MAPPING, write_poison
 from ..sources.protowire import decode_protobuf_records
 from .job import StreamMetrics, run_stream
 
@@ -94,6 +94,8 @@ class EsHadoopSink:
       cutoff (main.go:216-254);
     - ``write_errors`` keeps the parquet poison bucket (T2): corrupt
       protobuf records belong in durable storage for replay, not in ES.
+      It is ``ParquetIndexSink``'s poison writer (``bulk.write_poison``):
+      a replayed batch replaces its own poison rows.
 
     HTTP goes through ``opener`` (stdlib urlopen by default) so tests
     can capture the requests without a cluster.
@@ -168,9 +170,7 @@ class EsHadoopSink:
         )
 
     def write_errors(self, poison: DataFrame, batch_id: int) -> None:
-        poison.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).partitionBy("batch_id").parquet(str(self.error_root))
+        write_poison(poison, self.error_root, batch_id)
 
     # -- P4: retention (main.go:216-254) -------------------------------
     def drop_expired(self, days_to_keep: int, today=None) -> list[str]:

@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cga_kinesis_to_elasticsearch_spark.operators.enrichment import (
-    enrich,
+    compile_enrich,
     flatten_dimensions,
     strip_app_suffixes,
 )
@@ -69,9 +69,14 @@ def _rec(app_id, origin="env1"):
     )
 
 
+def _enrich(stream, dims, allowed_origins):
+    join, cols = compile_enrich(allowed_origins)
+    return join(stream, dims).withColumns(cols)
+
+
 def _enrich_one(spark, dims, app_id, origin="env1"):
     df = spark.createDataFrame([_rec(app_id, origin)], RECORD_SCHEMA)
-    out = enrich(df, dims, allowed_origins=["env1", "env2"])
+    out = _enrich(df, dims, allowed_origins=["env1", "env2"])
     return out.select(
         "`@cf.app`", "`@cf.app_id`", "`@cf.space`", "`@cf.space_id`",
         "`@cf.org`", "`@cf.org_id`"
@@ -138,7 +143,7 @@ class TestEnrichJoin:
     def test_broadcast_join_in_plan(self, spark, dims):
         df = spark.createDataFrame([_rec("aa-2")], RECORD_SCHEMA)
         plan = (
-            enrich(df, dims, ["env1"])
+            _enrich(df, dims, ["env1"])
             ._jdf.queryExecution()
             .executedPlan()
             .toString()

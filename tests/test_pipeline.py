@@ -3,11 +3,17 @@
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
 from cga_kinesis_to_elasticsearch_spark.operators.enrichment import flatten_dimensions
-from cga_kinesis_to_elasticsearch_spark.pipeline import PipelineConfig, run_pipeline
+from cga_kinesis_to_elasticsearch_spark.pipeline import (
+    PipelineConfig,
+    compile_pipeline,
+    run_pipeline,
+)
 from cga_kinesis_to_elasticsearch_spark.sources.envelopes import (
     ALLOWED_ORIGINS,
     synthesize_cf_dimensions,
@@ -155,3 +161,45 @@ class TestPostStages:
         # the parity contract: with no stage applied, the document
         # schema is untouched
         assert "ua_family" not in docs.columns
+
+
+class TestCompiledPipeline:
+    @pytest.mark.parametrize("all_routes", [False, True])
+    def test_one_compile_serves_many_batches(
+        self, spark, records, dim, all_routes, monkeypatch
+    ):
+        """A stream compiles the pipeline once and applies it to every
+        micro-batch: each apply must equal a fresh run_pipeline, with
+        the same Column objects (ROUTERACCESS's 22 aliased captures
+        included) reused across batches, and issue only the DataFrame
+        ops (a fresh build takes ~2,000 py4j round trips)."""
+        cfg = PipelineConfig(
+            allowed_origins=ALLOWED_ORIGINS, enable_disabled_routes=all_routes
+        )
+        compiled = compile_pipeline(cfg)
+        half = F.pmod(F.xxhash64("sequence_number"), F.lit(2))
+        client = spark.sparkContext._gateway._gateway_client
+        send = client.send_command
+        me = threading.get_ident()
+
+        def counting(command, *args, **kwargs):
+            # this thread's calls only: py4j's finalizer thread sends
+            # the releases ("m" commands) of JavaObjects freed at any
+            # earlier time, 0 to ~1,700 of them within one apply
+            if threading.get_ident() == me:
+                sent.append(command)
+            return send(command, *args, **kwargs)
+
+        for k in range(2):
+            batch = records.filter(half == k)
+            sent = []
+            monkeypatch.setattr(client, "send_command", counting)
+            got = compiled(batch, dim)
+            monkeypatch.undo()
+            assert len(sent) <= 400, len(sent)
+            want = run_pipeline(batch, dim, cfg)
+            assert got.count() > 0
+            assert got.exceptAll(want).count() == 0
+            assert want.exceptAll(got).count() == 0
+            if all_routes:
+                assert got.filter(F.col("parsed_routeraccess").isNotNull()).count() > 0

@@ -200,6 +200,26 @@ class TestEsHadoopSinkInStream:
         assert any(method == "PUT" for method, _, _ in opener.calls)
 
 
+class TestEsHadoopSinkPoison:
+    def test_replayed_batch_keeps_one_poison_copy(self, spark, tmp_path, in_batch):
+        """The es-hadoop sink's poison bucket is the parquet sink's keyed
+        writer: the replay of a batch replaces its own poison rows."""
+        from pyspark.sql.types import IntegerType
+
+        sink = EsHadoopSink(
+            _cfg(es_url="es.internal:9200"),
+            error_root=tmp_path / "errors",
+            opener=_FakeOpener(),
+        )
+        poison = spark.range(5).select(F.col("id").cast("string").alias("shard_id"))
+        in_batch("q1", 0)
+        sink.write_errors(poison, 0)
+        sink.write_errors(poison, 0)  # the replay of batch 0
+        errs = spark.read.parquet(str(tmp_path / "errors"))
+        assert errs.count() == 5
+        assert errs.schema["batch_id"].dataType == IntegerType()
+
+
 class TestProductionWiring:
     def test_end_to_end_with_standins_and_metrics_endpoint(
         self, spark, sf_dir, tmp_path

@@ -7,9 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from cga_kinesis_to_elasticsearch_spark.operators.routing import (
+    compile_route,
     filter_identifiable,
     filter_log_messages,
-    route,
 )
 from cga_kinesis_to_elasticsearch_spark.schemas import RECORD_SCHEMA
 
@@ -69,7 +69,7 @@ class TestRouteSwitch:
         assert filter_log_messages(records).count() == 8
 
     def test_active_routes_only(self, records):
-        out = route(filter_log_messages(records))
+        out = compile_route()(filter_log_messages(records))
         got = {r.tags.get("source_id", ""): r.index_class for r in out.collect()}
         assert out.count() == 2
         classes = [r.index_class for r in out.collect()]
@@ -78,7 +78,7 @@ class TestRouteSwitch:
         assert patterns == {"GENERIC"}
 
     def test_disabled_routes_resurrected(self, records):
-        out = route(filter_log_messages(records), enable_disabled_routes=True)
+        out = compile_route(enable_disabled_routes=True)(filter_log_messages(records))
         by_class = {
             r["index_class"]: r["grok_pattern"]
             for r in out.select("index_class", "grok_pattern").collect()
@@ -95,13 +95,13 @@ class TestRouteSwitch:
     def test_first_match_wins(self, records):
         # row 8 has BOTH /var/log/ prefix and gorouter tag; the switch
         # hits the prefix arm first (drop when disabled)
-        out = route(filter_log_messages(records))
+        out = compile_route()(filter_log_messages(records))
         kept_ids = {r.rid for r in out.collect()}
         assert "9" not in kept_ids  # sequence numbers are positional
 
     def test_no_shuffle_in_plan(self, records):
         plan = (
-            route(filter_log_messages(records))
+            compile_route()(filter_log_messages(records))
             ._jdf.queryExecution()
             .executedPlan()
             .toString()

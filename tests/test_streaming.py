@@ -51,17 +51,22 @@ def fixture_dir(spark, records, tmp_path_factory):
     N_POISON corrupt payloads."""
     d = tmp_path_factory.mktemp("rawstream")
     write_raw_records(records, str(d))
-    poison = spark.range(N_POISON).select(
+    _poison(spark, N_POISON).coalesce(1).write.mode("append").parquet(str(d))
+    return str(d)
+
+
+def _poison(spark, n, prefix="poison-"):
+    """``n`` raw records whose payload decodes as neither protobuf nor
+    JSON."""
+    return spark.range(n).select(
         F.lit("shard-x").alias("shard_id"),
-        F.concat(F.lit("poison-"), F.col("id").cast("string")).alias(
+        F.concat(F.lit(prefix), F.col("id").cast("string")).alias(
             "sequence_number"
         ),
         F.lit("pk").alias("partition_key"),
         F.lit(dt.datetime(2024, 1, 1)).cast("timestamp").alias("arrival_ts"),
         F.lit(b"\x00\x01 not protobuf, not json").alias("data"),
     )
-    poison.coalesce(1).write.mode("append").parquet(str(d))
-    return str(d)
 
 
 @pytest.fixture(scope="module")
@@ -86,6 +91,29 @@ def streamed(spark, dim, fixture_dir, tmp_path_factory):
     return sink, metrics, cfg, str(ck), fixture_dir
 
 
+def _count_docs(docs):
+    docs.count()
+    return docs
+
+
+def _count_written(docs, touched, batch_id):
+    docs.count()
+
+
+def _group_jobs(spark, group):
+    """(job id, description) of every job in ``group`` the status store
+    still holds."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    out = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobGroup().isDefined() and job.jobGroup().get() == group:
+            d = job.description()
+            out.append((job.jobId(), d.get() if d.isDefined() else None))
+    return out
+
+
 class TestJobGroups:
     def test_every_batch_job_carries_the_stream_job_group(
         self, spark, dim, fixture_dir, tmp_path
@@ -99,6 +127,8 @@ class TestJobGroups:
             checkpoint_location=str(tmp_path / "ck"),
             available_now=True,
             pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
+            before_write=(_count_docs,),
+            after_write=(_count_written,),
         )
         query, metrics = run_stream(
             spark,
@@ -114,6 +144,82 @@ class TestJobGroups:
         assert tracker.getJobIdsForGroup(str(query.runId))
         # only ids beyond the snapshot: old jobs may be evicted meanwhile
         assert set(tracker.getJobIdsForGroup()) - ungrouped_before == set()
+        # ... and every job is named after the runner stage that ran it,
+        # the pool thread's poison count included
+        stages = {
+            "count",
+            "write",
+            "poison",
+            "errors",
+            "before_write:_count_docs",
+            "after_write:_count_written",
+        }
+        described = {d for _, d in _group_jobs(spark, str(query.runId))}
+        assert described == stages
+
+
+class TestStableBatchPlan:
+    def test_no_codegen_and_at_most_nine_jobs_per_batch(
+        self, spark, records, dim, tmp_path
+    ):
+        """Every micro-batch applies one compiled plan: once the first
+        batch has compiled its classes, a batch with poison rows
+        compiles no new Janino class (an integer batch-id literal in
+        the poison write used to compile 2 per batch), and a batch of
+        one index runs at most 9 jobs. A batch over several indices
+        keeps the sink's salted shuffle, one writing task per index
+        rather than one task for all: its write runs 2 jobs."""
+        src = tmp_path / "raw"
+        day = F.dayofmonth("arrival_ts")
+        # the default routes send every document to gorouter-<day>: the
+        # first three batches hold one index each, the last ~27
+        for k, part in enumerate([day == 1, day == 2, day == 3, day > 3]):
+            # one append of 4 files per batch (maxFilesPerTrigger = 4),
+            # each batch with its own records and poison rows
+            poison = _poison(spark, 5, prefix=f"poison-{k}-")
+            encode_records(records.filter(part)).unionByName(poison).repartition(
+                4
+            ).write.mode("append").parquet(str(src))
+        # a batch's last step is its poison write: read the compile
+        # counter there, once per batch
+        codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        compiled: list[int] = []
+
+        class EndOfBatch(ParquetIndexSink):
+            def write_errors(self, poison, batch_id):
+                super().write_errors(poison, batch_id)
+                compiled.append(codegen.METRIC_COMPILATION_TIME().getCount())
+
+        # a materialized dimension snapshot, so the first batch does not
+        # also run the dimension's own jobs
+        dim.count()
+        cfg = StreamConfig(
+            checkpoint_location=str(tmp_path / "ck"),
+            available_now=True,
+            pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
+        )
+        sink = EndOfBatch(tmp_path / "sink")
+        query, metrics = run_stream(
+            spark,
+            read_raw_record_stream(spark, str(src)),
+            lambda s: dim,
+            sink,
+            cfg,
+        )
+        drain(query)
+        assert metrics.errors_count == 20
+        assert len(sink.indices()) > 3
+        assert len(compiled) == 4
+        assert compiled[2] == compiled[0], compiled
+        # every batch ends with its poison write
+        batches: list[list[str]] = [[]]
+        for _, described in sorted(_group_jobs(spark, str(query.runId))):
+            batches[-1].append(described)
+            if described == "errors":
+                batches.append([])
+        assert batches.pop() == [] and len(batches) == 4, batches
+        assert all(len(b) <= 9 and b.count("write") == 1 for b in batches[:3]), batches
+        assert batches[3].count("write") == 2, batches
 
 
 class TestRoundTrip:
