@@ -146,11 +146,20 @@ class EngineConfig:
         )
 
     def stream_config(self):
+        """The production ``StreamConfig``: protobuf payloads (S7), the
+        /metrics endpoint (K5) and the daily retention sweep
+        (main.go:170-178). The production stream, its error-bucket
+        replay and backfills all run from this one config."""
+        from .sources.protowire import decode_protobuf_records
         from .streaming.job import StreamConfig
+        from .streaming.production import retention_cadence
 
         return StreamConfig(
             checkpoint_location=self.checkpoint_location,
             trigger_seconds=self.trigger_seconds,
+            metrics_listen=self.metrics_listen,
             pipeline=self.pipeline_config(),
             days_to_keep=self.days_to_keep,
+            retention_every_batches=retention_cadence(self.trigger_seconds),
+            decoder=decode_protobuf_records,
         )

@@ -26,7 +26,6 @@ __all__ = [
     "canonical_edges",
     "triangle_counts",
     "clustering_coefficients",
-    "pagerank",
     "pagerank_fixed",
     "bfs_levels",
     "label_propagation",
@@ -154,75 +153,6 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iter: int = 10,
-    damping: float = 0.85,
-    directed: bool = False,
-) -> DataFrame:
-    """Power-iteration PageRank over an edge DataFrame (columns
-    ``a``/``b`` — canonical_edges output; ``directed=False`` walks
-    both ways). Returns ``(node, rank DOUBLE)`` with ranks on the
-    classic 1-centered scale (sum ~= |V|).
-
-    Scale shape: each iteration is ONE join of the edge list against
-    the (node, rank) table (shuffle on node id) + one
-    map-side-combined sum — the textbook distributed formulation; the
-    rank table is |V| rows. localCheckpoint per iteration truncates
-    the growing lineage exactly like bpe_train's loop. Dangling nodes
-    keep the teleport share (simplified PageRank; the reference point
-    is Spark's own example semantics).
-
-    Float caveat: per-node contribution sums are addition-order-
-    dependent, so results are reproducible only to ~1e-9 across runs —
-    this is a rows-only capability (pinned with tolerances in
-    test_graph.py), not a hash-oracle one.
-    """
-    out_edges = edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    if not directed:
-        out_edges = out_edges.unionAll(
-            edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-    # the loop body references these every iteration — materialize once
-    out_edges = out_edges.localCheckpoint()
-    nodes = (
-        out_edges.select(F.col("src").alias("node"))
-        .unionAll(out_edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = (
-        out_edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("out_deg"))
-        .localCheckpoint()
-    )
-    ranks = nodes.withColumn("rank", F.lit(1.0)).localCheckpoint()
-    for _ in range(n_iter):
-        contribs = (
-            out_edges.join(
-                ranks.join(deg, "node").select(
-                    F.col("node").alias("src"),
-                    (F.col("rank") / F.col("out_deg")).alias("share"),
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").alias("in_rank"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce("in_rank", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks
-
-
 def pagerank_fixed(
     edges: DataFrame,
     n_iter: int = 6,
@@ -230,12 +160,21 @@ def pagerank_fixed(
     scale: int = 10**12,
     directed: bool = False,
 ) -> DataFrame:
-    """Integer fixed-point PageRank: identical plan shape to
-    ``pagerank`` but every quantity is a scaled BIGINT and every
-    division floors, so the result is bit-exact regardless of
-    partitioning or addition order — unlike the float variant, this IS
-    hash-oracle-checkable (a SQL engine replays the same iterations
-    with integer arithmetic and gets the same longs).
+    """Integer fixed-point power-iteration PageRank over an edge
+    DataFrame (columns ``a``/``b`` — canonical_edges output;
+    ``directed=False`` walks both ways). Every quantity is a scaled
+    BIGINT and every division floors, so the result is bit-exact
+    regardless of partitioning or addition order: float per-node sums
+    are addition-order-dependent, these are hash-oracle-checkable (a
+    SQL engine replays the same iterations with integer arithmetic and
+    gets the same longs).
+
+    Scale shape: each iteration is ONE join of the edge list against
+    the (node, rank) table (shuffle on node id) + one map-side-combined
+    sum — the textbook distributed formulation; the rank table is |V|
+    rows. localCheckpoint per iteration truncates the growing lineage
+    exactly like bpe_train's loop. Dangling nodes keep the teleport
+    share (simplified PageRank; Spark's own example semantics).
 
     rank0 = scale; per iteration
     ``rank' = (scale*(100-damping_pct)) DIV 100
@@ -416,7 +355,7 @@ def kcore(edges: DataFrame, k: int, n_rounds: int) -> DataFrame:
     Scale shape: each round is one (node) degree aggregation over the
     CURRENT edge set plus two semi-joins to drop edges with a peeled
     endpoint; ``localCheckpoint`` per round truncates the iterative
-    lineage exactly as ``pagerank`` does, so round N's plan never
+    lineage exactly as ``pagerank_fixed`` does, so round N's plan never
     re-executes rounds 1..N-1. The edge set only shrinks."""
     if k < 1:
         raise ValueError(f"k must be >= 1: {k}")

@@ -7,8 +7,10 @@ code is commented out, main.go:367-394); ``enable_disabled_routes=True``
 resurrects them with their original patterns, which is how the richest
 pattern (ROUTERACCESS) gets exercised end-to-end.
 
-All functions are pure DataFrame -> DataFrame and run unchanged under
-Structured Streaming (narrow ops only — no shuffle at any scale).
+Each function returns Columns (or a pure DataFrame -> DataFrame made
+of them) that ``pipeline.compile_pipeline`` builds once and that run
+unchanged under Structured Streaming (narrow ops only — no shuffle at
+any scale).
 """
 
 from __future__ import annotations
@@ -24,9 +26,8 @@ __all__ = [
     "Route",
     "ROUTE_TABLE",
     "is_log_message",
-    "filter_log_messages",
     "compile_route",
-    "filter_identifiable",
+    "compile_identifiable",
 ]
 
 
@@ -56,12 +57,6 @@ DROP = "__drop__"
 def is_log_message() -> Column:
     """F1's predicate: the envelope is a LogMessage (main.go:362-364)."""
     return F.col("event_type") == EVENT_TYPE_LOG_MESSAGE
-
-
-def filter_log_messages(df: DataFrame) -> DataFrame:
-    """F1: keep only LogMessage envelopes; everything else silently
-    dropped (main.go:362-364)."""
-    return df.filter(is_log_message())
 
 
 def _conditions() -> dict[str, Column]:
@@ -104,10 +99,26 @@ def compile_route(
     return lambda df: df.withColumns(cols).filter(routed)
 
 
-def filter_identifiable(df: DataFrame, rtr_app_id: Column | None = None) -> DataFrame:
-    """F3: keep a record only if ``log_message.app_id`` or the grok
-    capture ``rtr_app_id`` is non-empty (main.go:414-430). Pass the
-    parsed capture column when the ROUTERACCESS route is live."""
-    app_id = F.coalesce(F.col("log_message.app_id"), F.lit(""))
-    rtr = F.coalesce(rtr_app_id, F.lit("")) if rtr_app_id is not None else F.lit("")
-    return df.filter((app_id != "") | (rtr != ""))
+def compile_identifiable(rtr_live: bool) -> tuple[Column, Column]:
+    """F3 (main.go:414-430) as ``(app_guid, identifiable)``: the app id
+    from the envelope, else the ROUTERACCESS ``rtr_app_id`` capture when
+    that route is live (``rtr_live``); a record is identifiable when
+    one of the two is non-empty.
+
+    The predicate deliberately tests struct NULLness, not the
+    rtr_app_id field: ROUTERACCESS captures app_id as \\S+
+    (main.go:562), so the capture is non-empty exactly when the pattern
+    matched, and ``parsed_routeraccess IS NOT NULL`` is equivalent to
+    ``rtr_app_id != ''``. The difference is the physical plan: a
+    pushed-down predicate on the struct FIELD re-inlines the whole parse
+    chain (regex re-evaluated ~4x per row inside the Filter); the NULL
+    test inlines only the sentinel startswith — measured 1.6x on the
+    full pipeline."""
+    rtr = F.col("parsed_routeraccess.rtr_app_id") if rtr_live else F.lit("")
+    has_app_id = F.coalesce(F.col("log_message.app_id"), F.lit("")) != ""
+    app_guid = F.when(has_app_id, F.col("log_message.app_id")).otherwise(
+        F.coalesce(rtr, F.lit(""))
+    )
+    if not rtr_live:
+        return app_guid, has_app_id
+    return app_guid, has_app_id | F.col("parsed_routeraccess").isNotNull()

@@ -24,7 +24,12 @@ from .grok import Grok, default_grok
 from .grok.spark import compile_grok_many
 from .operators.computed import computed_columns
 from .operators.enrichment import compile_enrich
-from .operators.routing import ROUTE_TABLE, compile_route, is_log_message
+from .operators.routing import (
+    ROUTE_TABLE,
+    compile_identifiable,
+    compile_route,
+    is_log_message,
+)
 
 __all__ = ["PipelineConfig", "run_pipeline", "compile_pipeline", "DOC_COLUMNS"]
 
@@ -110,30 +115,9 @@ def compile_pipeline(
         ],
     )
 
-    # F3: identifiability — app_id from the envelope, else the
-    # ROUTERACCESS rtr_app_id capture when that route is live
-    # (main.go:414-430).
-    rtr = (
-        F.col("parsed_routeraccess.rtr_app_id")
-        if "ROUTERACCESS" in patterns_in_use
-        else F.lit("")
-    )
-    has_app_id = F.coalesce(F.col("log_message.app_id"), F.lit("")) != ""
-    app_guid = F.when(has_app_id, F.col("log_message.app_id")).otherwise(
-        F.coalesce(rtr, F.lit(""))
-    )
-    # The filter deliberately tests struct NULLness, not the rtr_app_id
-    # field: ROUTERACCESS captures app_id as \S+ (main.go:562), so the
-    # capture is non-empty exactly when the pattern matched, and
-    # `parsed IS NOT NULL` is equivalent to `rtr_app_id != ''`. The
-    # difference is the physical plan: a pushed-down predicate on the
-    # struct FIELD re-inlines the whole parse chain (regex re-evaluated
-    # ~4x per row inside the Filter); the NULL test inlines only the
-    # sentinel startswith — measured 1.6x on the full pipeline.
-    identifiable = (
-        has_app_id | F.col("parsed_routeraccess").isNotNull()
-        if "ROUTERACCESS" in patterns_in_use
-        else has_app_id
+    # F3: identifiability (main.go:414-430).
+    app_guid, identifiable = compile_identifiable(
+        "ROUTERACCESS" in patterns_in_use
     )
 
     # J1-J4: broadcast enrichment join.

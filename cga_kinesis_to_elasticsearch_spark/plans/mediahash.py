@@ -241,9 +241,8 @@ def _neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph.pagerank_fixed — integer fixed-point power iteration (6
     undirected rounds), bit-exact under any partitioning, so the
     DuckDB oracle replays the identical iterations (unrolled CTEs) and
-    hash-matches the scaled-BIGINT ranks. The float variant
-    (graph.pagerank) remains for callers who prefer classic doubles;
-    its ~1e-9 run-to-run drift is why THIS query uses fixed-point."""
+    hash-matches the scaled-BIGINT ranks; float ranks would drift
+    ~1e-9 from run to run with the addition order."""
     from ..operators import multimodal as M
     from ..operators.graph import canonical_edges, pagerank_fixed
 

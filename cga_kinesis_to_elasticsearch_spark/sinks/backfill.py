@@ -27,14 +27,13 @@ are not produced by the filtered record set.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..pipeline import PipelineConfig, run_pipeline
-from ..streaming.job import run_before_write
+from ..pipeline import run_pipeline
+from ..streaming.job import StreamConfig, run_before_write
 from ._swap import recover_and_sweep, write_partitions_swapped
 
 __all__ = ["BackfillStats", "backfill"]
@@ -52,28 +51,30 @@ def backfill(
     records: DataFrame,
     dim: DataFrame,
     data_root: str | Path,
-    config: PipelineConfig | None = None,
-    before_write: tuple[Callable[[DataFrame], DataFrame], ...] = (),
+    cfg: StreamConfig,
 ) -> BackfillStats:
-    """Recompute documents for ``records`` and swap the touched index
-    partitions into ``data_root`` (the sink's ``data/`` directory).
+    """Recompute documents for ``records`` (decoded) and swap the
+    touched index partitions into ``data_root`` (the sink's ``data/``
+    directory).
 
-    ``before_write`` takes the stream's ``StreamConfig.before_write``
-    stages and runs them the way the stream does. A deployment that
-    streams with the cross-batch exact or near-dup index filters
-    (``dedup_against_index`` / ``neardup_against_index``) MUST pass the
-    same stages here: first-id semantics make the re-application
-    reproduce the stream's survivors, and content first seen by the
-    backfill gets registered. Omitting them would resurrect suppressed
-    duplicates in the rewritten partitions."""
+    ``cfg`` is the stream's own config: its pipeline recomputes the
+    documents, and its ``before_write`` stages run the way the stream
+    runs them. A deployment that streams with the cross-batch exact or
+    near-dup index filters (``dedup_against_index`` /
+    ``neardup_against_index``) gets them here too: first-id semantics
+    make the re-application reproduce the stream's survivors, and
+    content first seen by the backfill gets registered. Without them,
+    suppressed duplicates would come back in the rewritten
+    partitions."""
     root = Path(data_root)
     root.mkdir(parents=True, exist_ok=True)
     recover_and_sweep(root)
     before = {p.name for p in root.iterdir()}
-    docs = run_pipeline(records, dim, config).drop("log_message", "arrival_ts")
+    docs = run_pipeline(records, dim, cfg.pipeline)
+    docs = docs.drop("log_message", "arrival_ts")
     held: list[DataFrame] = []
     try:
-        docs = run_before_write(docs, before_write, held)
+        docs = run_before_write(docs, cfg.before_write, held)
         written = write_partitions_swapped(docs, root, "es_index")
     finally:
         for df in held:

@@ -3,11 +3,13 @@
 The reference consumes opaque ``Data []byte`` per Kinesis record and
 protobuf-decodes it into an ``events.Envelope`` (main.go:357-360); a
 malformed record is counted, logged and skipped-on-restart
-(consumer.go:213-232). This module reproduces the same contract with a
-wire format this container can produce: the envelope serialized as a
-JSON document in the ``data`` bytes. In production the only change is
-swapping ``from_json`` for ``from_protobuf`` (Spark >= 3.4) against the
-Envelope descriptor — the rest of the plan is identical.
+(consumer.go:213-232). This module reproduces the same contract in
+the test fixtures' format: the envelope serialized as a JSON document
+in the ``data`` bytes. Production decodes the reference's protobuf
+instead — ``sources/protowire.py`` encodes and decodes that wire
+format, and ``EngineConfig.stream_config()`` sets its
+``decode_protobuf_records`` as the stream's decoder; the rest of the
+plan is identical.
 
 Decode is declarative (``from_json`` under codegen, no Python row
 code); corrupt payloads become an error bucket instead of crashing the

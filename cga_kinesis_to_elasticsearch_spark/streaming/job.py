@@ -16,7 +16,7 @@ Streaming:
   skip (T2, consumer.go:213-232): same observable outcome (record
   skipped, error counted), no process restart
 - sent/error counters       <- Prometheus counters (A1, main.go:41-47),
-  exposed in Prometheus text format (K5)
+  exposed in Prometheus text format (K5), next to a records-in counter
 
 Everything inside ``foreachBatch`` is the SAME pure batch code the
 DuckDB oracle checks — batch/stream parity by construction:
@@ -35,7 +35,8 @@ name, under the stream's job group):
    (``before_write:<name>``);
 3. ``count``: cache the final docs and run ONE per-index aggregation
    (touched indices, sent counter, file fan-out);
-4. ``poison`` (a pool thread, over the cached records) alongside
+4. ``poison`` (a pool thread: ONE aggregation over the cached records
+   counts the records and the poison rows) alongside
    ``write``: a one-index batch that fits one file is written from one
    partition of the cached docs, with no shuffle;
 5. ``after_write`` stages (``after_write:<name>``);
@@ -63,7 +64,6 @@ from ..sources.records import decode_records
 __all__ = [
     "StreamConfig",
     "StreamMetrics",
-    "ObservedCounters",
     "run_before_write",
     "run_stream",
 ]
@@ -72,63 +72,15 @@ __all__ = [
 _DESCRIPTION = "spark.job.description"
 
 
-class ObservedCounters:
-    """A1 via the Spark-native path: ``df.observe`` on the source +
-    a StreamingQueryListener reading ``progress.observedMetrics`` —
-    per-batch record counts with zero extra actions (the metric rides
-    the existing job). Complements StreamMetrics (which counts the
-    pipeline's sent/error outcomes inside foreachBatch).
-
-    Use: ``listener = ObservedCounters.install(spark)``; pass
-    ``observe_records=True`` to run_stream; read
-    ``listener.records_in``. Remove with ``uninstall``.
-    """
-
-    OBSERVATION = "records_in"
-
-    def __init__(self) -> None:
-        self.records_in = 0
-        self._listener = None
-
-    @classmethod
-    def install(cls, spark: SparkSession) -> "ObservedCounters":
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        self = cls()
-
-        class _L(StreamingQueryListener):
-            def onQueryStarted(inner, event) -> None:  # noqa: N805
-                pass
-
-            def onQueryProgress(inner, event) -> None:  # noqa: N805
-                om = event.progress.observedMetrics
-                row = om.get(cls.OBSERVATION)
-                if row is not None:
-                    self.records_in += row["n"] or 0
-
-            def onQueryIdle(inner, event) -> None:  # noqa: N805
-                pass
-
-            def onQueryTerminated(inner, event) -> None:  # noqa: N805
-                pass
-
-        self._listener = _L()
-        self._spark = spark
-        spark.streams.addListener(self._listener)
-        return self
-
-    def uninstall(self) -> None:
-        if self._listener is not None:
-            self._spark.streams.removeListener(self._listener)
-            self._listener = None
-
-
 @dataclass
 class StreamMetrics:
-    """A1: the two monotonic counters (main.go:41-47)."""
+    """A1: the two monotonic counters (main.go:41-47), plus the records
+    the stream has read (good and poison), which the poison-count job
+    yields."""
 
     sent_count: int = 0
     errors_count: int = 0
+    records_in: int = 0
     # set by run_stream when StreamConfig.metrics_listen is configured
     # (K5); caller stops it with metrics.http_server.stop()
     http_server: object | None = None
@@ -141,6 +93,8 @@ class StreamMetrics:
             f"app_kinesis_to_es_sent_count {self.sent_count}\n"
             "# TYPE app_kinesis_to_es_errors_count counter\n"
             f"app_kinesis_to_es_errors_count {self.errors_count}\n"
+            "# TYPE app_kinesis_to_es_records_in counter\n"
+            f"app_kinesis_to_es_records_in {self.records_in}\n"
         )
 
 
@@ -157,9 +111,11 @@ class StreamConfig:
     days_to_keep: int = 3  # DAYS_TO_KEEP, main.go:553
     retention_every_batches: int = 0  # 0 = off; reference runs 24-hourly
     # Payload decoder: raw records -> RECORD_SCHEMA + decode_error.
-    # Default: the from_json stand-in (sources/records.py); the
-    # Arrow-batched protobuf wire codec is
-    # sources/protowire.decode_protobuf_records, and Spark's
+    # Default: the test fixtures' JSON codec (sources/records.py).
+    # Production's config (EngineConfig.stream_config) sets the
+    # Arrow-batched protobuf wire codec,
+    # sources/protowire.decode_protobuf_records; replay_errors decodes
+    # the error bucket with this same field. Spark's
     # from_protobuf against the compiled Envelope descriptor is
     # sources/protodesc.select_protobuf_decoder(spark, "jvm") — 100%
     # codegen, falling back LOUDLY to the Arrow codec when the
@@ -238,7 +194,6 @@ def run_stream(
     sink: ParquetIndexSink,
     cfg: StreamConfig,
     metrics: StreamMetrics | None = None,
-    observe_records: bool = False,
 ):
     """Start the streaming query; returns (query, metrics).
 
@@ -252,10 +207,6 @@ def run_stream(
         from .metrics_http import MetricsServer
 
         m.http_server = MetricsServer(m, cfg.metrics_listen).start()
-    if observe_records:
-        raw_stream = raw_stream.observe(
-            ObservedCounters.OBSERVATION, F.count(F.lit(1)).alias("n")
-        )
     batch_counter = {"n": 0}
     sc = spark.sparkContext
     # Every expression of the batch plan is built here, once: the
@@ -265,17 +216,19 @@ def run_stream(
     is_poison = F.col("decode_error")
     is_good = ~is_poison
     per_index = F.count(F.lit(1)).alias("__n")
+    # the record count and the poison count, in one aggregation
+    record_counts = (F.count(F.lit(1)), F.count_if(is_poison))
 
     def process_batch(raw: DataFrame, batch_id: int) -> None:
         # The runner owns every cache of the batch: the decoded records
         # and each before_write stage's input and output, all released
         # when the batch ends.
         #
-        # Decode once per batch; the good/poison split and the poison
-        # counter read the decoded frame, so cache it (bounded by
+        # Decode once per batch; the good/poison split and the record
+        # and poison counters read the decoded frame, so cache it (bounded by
         # trigger x arrival rate; availableNow backfills are capped by
         # maxFilesPerTrigger). NOTE: df.observe + Observation.get
-        # cannot replace the poison count here — inside foreachBatch
+        # cannot replace that count here — inside foreachBatch
         # the observed metrics ride the STREAMING progress, not the
         # per-batch query, and Observation.get throws (pinned by
         # TestErrorReplay, which runs an all-poison batch).
@@ -298,14 +251,16 @@ def run_stream(
             touched = [r["es_index"] for r in idx_counts]
             total = sum(r["__n"] for r in idx_counts)
             sink.ensure_indices(touched)
-            # the poison count only reads the populated records cache —
-            # submit it concurrently so it back-fills the sink write's
-            # task tail (guide §2.6) instead of running as its own
-            # serial job afterwards; the wrapper hands this thread's job
-            # group and local properties (the description included) to
-            # the pool thread
+            # the record and poison counts only read the populated
+            # records cache — submit their one job concurrently so it
+            # back-fills the sink write's task tail (guide §2.6) instead
+            # of running serially afterwards; the wrapper hands this
+            # thread's job group and local properties (the description
+            # included) to the pool thread
             sc.setJobDescription("poison")
-            count_poison = inheritable_thread_target(spark)(poison.count)
+            count_records = inheritable_thread_target(spark)(
+                records.agg(*record_counts).collect
+            )
             # a one-index batch that fits one file goes to the parquet
             # sink as ONE partition of the cached docs, which the sink
             # writes with no shuffle (ParquetIndexSink.write); only this
@@ -320,7 +275,7 @@ def run_stream(
             ):
                 written = docs.coalesce(1)
             with ThreadPoolExecutor(max_workers=1) as pool:
-                poison_fut = pool.submit(count_poison)
+                counts_fut = pool.submit(count_records)
                 sc.setJobDescription("write")
                 sink.write(
                     written,
@@ -328,7 +283,8 @@ def run_stream(
                         (r["__n"] for r in idx_counts), default=0
                     ),
                 )
-                n_poison = poison_fut.result()
+                n_records, n_poison = counts_fut.result()[0]
+            m.records_in += n_records
             m.sent_count += total
             for stage in cfg.after_write:
                 sc.setJobDescription(f"after_write:{_stage_name(stage)}")

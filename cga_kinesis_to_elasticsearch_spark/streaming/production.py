@@ -15,8 +15,11 @@ already-tested component with its production option map attached:
   ``EngineConfig.kinesis_source_options()``, column-mapped to
   RAW_RECORD_SCHEMA (tests inject the file source, which emits the
   same columns — the downstream plan is literally identical);
-- decode: ``sources.protowire.decode_protobuf_records`` (the real
-  wire-format codec) instead of the JSON stand-in;
+- decode, /metrics and the retention cadence: the stream runs
+  ``EngineConfig.stream_config()`` as is — the one production
+  ``StreamConfig`` (protobuf decode through
+  ``sources.protowire.decode_protobuf_records``), which
+  ``replay_errors`` and ``backfill`` take too;
 - sink: ``EsHadoopSink`` writing bulk batches through the es-hadoop
   connector's dynamic-resource pattern, with index-mapping PUTs and
   retention DELETEs over plain HTTP (main.go:292-329, 216-254). Tests
@@ -42,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import EngineConfig
 from ..sinks.bulk import DEFAULT_MAPPING, write_poison
-from ..sources.protowire import decode_protobuf_records
 from .job import StreamMetrics, run_stream
 
 __all__ = [
@@ -230,12 +232,7 @@ def run_production_stream(
     data (missing-tolerated, J3).
     """
     sc = cfg.stream_config()
-    sc.metrics_listen = cfg.metrics_listen
     sc.available_now = available_now  # tests/backfills: drain-and-stop
-    # real protobuf payloads in production (S7)
-    sc.decoder = decode_protobuf_records
-    # the reference deletes old indices daily (main.go:170-178)
-    sc.retention_every_batches = retention_cadence(sc.trigger_seconds)
 
     if raw_stream is None:
         raw_stream = kinesis_raw_stream(spark, cfg)

@@ -11,17 +11,22 @@ config.EngineConfig.from_env) at:
       --packages <kinesis-connector>,<elasticsearch-spark> \
       scripts/stream_job.py
 
-and gets the same pipeline on Structured Streaming. Without the
-connectors (e.g. this container) the job refuses with a clear message
-— or runs `--smoke`, which drives the identical pipeline from
-synthesized envelopes through the parquet sink, proving the wiring
-end-to-end with zero AWS dependencies:
+and gets the same pipeline on Structured Streaming: the job is one
+call to the one-switch assembly, ``run_production_stream`` (Kinesis
+source, protobuf decode, pipeline, es-hadoop sink, retention sweeps and
+/metrics, all from ``EngineConfig.stream_config()``). ``DIM_PATH``
+names the parquet snapshot of the flattened CF dimensions; unset, the
+documents carry no enrichment. Without the connectors the job refuses
+with a clear message — or runs `--smoke`, which drives the identical
+pipeline from synthesized envelopes through the parquet sink, proving
+the wiring end-to-end with zero AWS dependencies:
 
     python scripts/stream_job.py --smoke /tmp/smoke_out
 """
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -34,8 +39,12 @@ def main() -> int:
     from cga_kinesis_to_elasticsearch_spark.session import get_spark
     from cga_kinesis_to_elasticsearch_spark.sinks.bulk import ParquetIndexSink
     from cga_kinesis_to_elasticsearch_spark.streaming.job import (
+        StreamConfig,
         drain,
         run_stream,
+    )
+    from cga_kinesis_to_elasticsearch_spark.streaming.production import (
+        run_production_stream,
     )
 
     smoke = "--smoke" in sys.argv
@@ -57,7 +66,6 @@ def main() -> int:
             read_raw_record_stream,
             write_raw_records,
         )
-        from cga_kinesis_to_elasticsearch_spark.streaming.job import StreamConfig
 
         src = out / "raw"
         records = synthesize_envelopes(spark, "/root/testdata/sf0.001")
@@ -88,41 +96,19 @@ def main() -> int:
         return 2
     spark = get_spark(cfg.app_name)
     try:
-        raw = (
-            spark.readStream.format("kinesis")
-            .options(**cfg.kinesis_source_options())
-            .load()
+        handle = run_production_stream(
+            spark, cfg, dim_path=os.environ.get("DIM_PATH", "")
         )
     except Exception as exc:
         print(
-            "Kinesis connector unavailable — submit with "
-            "--packages <spark-sql-kinesis> (see README 'Running against "
-            f"real infrastructure').\n{exc}",
+            "production stream failed to start — if the Kinesis connector "
+            "is unavailable, submit with --packages <spark-sql-kinesis> "
+            "(see README 'Running against real infrastructure').\n"
+            f"{exc}",
             file=sys.stderr,
         )
         return 2
-
-    # real deployment: es-hadoop sink via cfg.es_connector_options();
-    # the parquet sink stands in when no ES cluster is reachable.
-    import os
-
-    sink = ParquetIndexSink(Path(os.environ.get("SINK_PATH", "/tmp/cga-sink")))
-
-    def dim_provider(s):
-        # production: refresh from the CF API snapshot job's parquet
-        from cga_kinesis_to_elasticsearch_spark.operators.enrichment import (
-            flatten_dimensions,
-        )
-        from cga_kinesis_to_elasticsearch_spark.sources.envelopes import (
-            synthesize_cf_dimensions,
-        )
-
-        return flatten_dimensions(*synthesize_cf_dimensions(s))
-
-    query, _metrics = run_stream(
-        spark, raw, dim_provider, sink, cfg.stream_config()
-    )
-    query.awaitTermination()
+    handle.query.awaitTermination()
     return 0
 
 

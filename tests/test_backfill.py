@@ -56,7 +56,9 @@ class TestBackfill:
         cfg_v2 = PipelineConfig(
             allowed_origins=ALLOWED_ORIGINS, enable_disabled_routes=True
         )
-        stats = backfill(spark, records, dim, root, cfg_v2)
+        stats = backfill(
+            spark, records, dim, root, StreamConfig(pipeline=cfg_v2)
+        )
 
         expected = run_pipeline(records, dim, cfg_v2).drop(
             "log_message", "arrival_ts"
@@ -99,7 +101,9 @@ class TestBackfill:
         slice_records = records.filter(
             F.date_format("arrival_ts", "yyyy-MM-dd") == some_day
         )
-        stats = backfill(spark, slice_records, dim, root, cfg)
+        stats = backfill(
+            spark, slice_records, dim, root, StreamConfig(pipeline=cfg)
+        )
         assert stats.partitions_added == 0
         assert 0 < stats.partitions_replaced < len(all_parts)
         after = {
@@ -153,17 +157,18 @@ class TestBackfillBeforeWriteStages:
             ),
         )
         sink = ParquetIndexSink(tmp_path / "sink")
+        stream_cfg = StreamConfig(
+            checkpoint_location=str(tmp_path / "ck"),
+            available_now=True,
+            pipeline=cfg,
+            before_write=stages,
+        )
         query, _ = run_stream(
             spark,
             read_raw_record_stream(spark, str(src)),
             lambda s: dim,
             sink,
-            StreamConfig(
-                checkpoint_location=str(tmp_path / "ck"),
-                available_now=True,
-                pipeline=cfg,
-                before_write=stages,
-            ),
+            stream_cfg,
         )
         drain(query)
         root = tmp_path / "sink" / "data"
@@ -180,6 +185,6 @@ class TestBackfillBeforeWriteStages:
         n_distinct = all_docs.select(text).distinct().count()
         assert 0 < len(streamed) < n_distinct < all_docs.count()
 
-        stats = backfill(spark, records, dim, root, cfg, before_write=stages)
+        stats = backfill(spark, records, dim, root, stream_cfg)
         assert landed_ids() == streamed
         assert stats.docs_written == len(streamed)

@@ -1,9 +1,9 @@
 """EngineConfig env-var surface (main.go:537-569 parity) and the
-observe()-based streaming counters."""
+streaming records-in counter."""
 
 from __future__ import annotations
 
-import time
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -51,9 +51,32 @@ class TestEngineConfig:
         assert sc.days_to_keep == 30
         assert sc.pipeline.allowed_origins == ["env1", "env2"]
 
+    def test_stream_config_is_the_production_config(self):
+        from cga_kinesis_to_elasticsearch_spark.sources.protowire import (
+            decode_protobuf_records,
+        )
+        from cga_kinesis_to_elasticsearch_spark.streaming.production import (
+            retention_cadence,
+        )
 
-class TestObservedCounters:
-    def test_records_in_via_listener(self, spark, sf_dir, tmp_path):
+        cfg = EngineConfig.from_env(
+            {
+                **BASE_ENV,
+                "METRICS_LISTEN": ":9100",
+                "FLUSH_INTERVAL_SECONDS": "30",
+            }
+        )
+        sc = cfg.stream_config()
+        assert sc.decoder is decode_protobuf_records
+        assert sc.metrics_listen == cfg.metrics_listen == ":9100"
+        assert sc.retention_every_batches == retention_cadence(
+            cfg.trigger_seconds
+        )
+        assert sc.trigger_seconds == 30
+
+
+class TestRecordsInCounter:
+    def test_records_in_via_metrics(self, spark, sf_dir, tmp_path):
         from cga_kinesis_to_elasticsearch_spark.operators.enrichment import (
             flatten_dimensions,
         )
@@ -69,7 +92,6 @@ class TestObservedCounters:
             write_raw_records,
         )
         from cga_kinesis_to_elasticsearch_spark.streaming.job import (
-            ObservedCounters,
             StreamConfig,
             drain,
             run_stream,
@@ -79,28 +101,21 @@ class TestObservedCounters:
         n_records = records.count()
         write_raw_records(records, str(tmp_path / "raw"))
         dim = flatten_dimensions(*synthesize_cf_dimensions(spark))
-        listener = ObservedCounters.install(spark)
-        try:
-            query, _ = run_stream(
-                spark,
-                read_raw_record_stream(spark, str(tmp_path / "raw")),
-                lambda s: dim,
-                ParquetIndexSink(tmp_path / "sink"),
-                StreamConfig(
-                    checkpoint_location=str(tmp_path / "ck"),
-                    available_now=True,
-                    pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
-                ),
-                observe_records=True,
-            )
-            drain(query)
-            # listener delivery is async; give it a moment
-            deadline = time.time() + 20
-            while time.time() < deadline and listener.records_in < n_records:
-                time.sleep(0.5)
-            assert listener.records_in == n_records
-        finally:
-            listener.uninstall()
+        query, metrics = run_stream(
+            spark,
+            read_raw_record_stream(spark, str(tmp_path / "raw")),
+            lambda s: dim,
+            ParquetIndexSink(tmp_path / "sink"),
+            StreamConfig(
+                checkpoint_location=str(tmp_path / "ck"),
+                available_now=True,
+                pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
+            ),
+        )
+        drain(query)
+        text = metrics.prometheus_text()
+        records_in = re.search(r"^app_kinesis_to_es_records_in (\d+)$", text, re.M)
+        assert int(records_in.group(1)) == n_records
 
 
 class TestSigV4Selection:

@@ -18,6 +18,7 @@ from cga_kinesis_to_elasticsearch_spark.sources.envelopes import (
     synthesize_cf_dimensions,
     synthesize_envelopes,
 )
+from cga_kinesis_to_elasticsearch_spark.streaming.job import StreamConfig
 
 IDX_A, IDX_B = "logs-2030-01-01", "logs-2030-01-02"
 
@@ -209,6 +210,7 @@ def dim(spark):
 
 
 CFG = PipelineConfig(allowed_origins=ALLOWED_ORIGINS)
+STREAM_CFG = StreamConfig(pipeline=CFG)
 
 
 class TestPipelineWriters:
@@ -221,7 +223,7 @@ class TestPipelineWriters:
         sink.write(docs)
         in_batch(None, None)
         n = docs.count()
-        backfill(spark, records, dim, sink.root / "data", CFG)
+        backfill(spark, records, dim, sink.root / "data", STREAM_CFG)
         ids = _read_ids(spark, sink)
         assert set(ids.values()) == {1} and len(ids) == n
 
@@ -237,7 +239,7 @@ class TestPipelineWriters:
         # them outside the stream
         sink.write_errors(encode_records(records), 0)
         in_batch(None, None)
-        out = replay_errors(spark, sink, dim, CFG)
+        out = replay_errors(spark, sink, dim, STREAM_CFG)
         n = docs.count()
         assert out["replayed"] == n
         assert sum(_raw_ids(spark, sink).values()) == 2 * n

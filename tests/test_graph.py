@@ -81,42 +81,23 @@ class TestTriangles:
 class TestPageRank:
     def test_star_center_dominates_and_mass_conserved(self, spark):
         from cga_kinesis_to_elasticsearch_spark.operators.graph import (
-            pagerank,
+            pagerank_fixed,
         )
 
+        scale, n_iter = 10**12, 12
         star = _edges(spark, [(0, i) for i in range(1, 7)])
-        ranks = {r["node"]: r["rank"] for r in pagerank(star, 12).collect()}
-        assert max(ranks, key=lambda n: ranks[n]) == 0
-        leaves = [v for n, v in ranks.items() if n != 0]
-        assert max(leaves) - min(leaves) < 1e-9  # symmetric leaves tie
-        # undirected graph has no dangling nodes: mass is conserved
-        assert abs(sum(ranks.values()) - len(ranks)) < 1e-6
-
-    def test_matches_python_power_iteration(self, spark):
-        from cga_kinesis_to_elasticsearch_spark.operators.graph import (
-            pagerank,
-        )
-
-        pairs = [(1, 2), (2, 3), (1, 3), (3, 4)]
-        got = {
-            r["node"]: r["rank"]
-            for r in pagerank(_edges(spark, pairs), 15).collect()
+        ranks = {
+            r["node"]: r["rank_fp"]
+            for r in pagerank_fixed(star, n_iter, scale=scale).collect()
         }
-        # pure-Python reference with identical semantics
-        adj: dict[int, list[int]] = {}
-        for a, b in pairs:
-            adj.setdefault(a, []).append(b)
-            adj.setdefault(b, []).append(a)
-        ranks = {n: 1.0 for n in adj}
-        for _ in range(15):
-            nxt = {n: 0.15 for n in adj}
-            for n, nbrs in adj.items():
-                share = ranks[n] / len(nbrs)
-                for m in nbrs:
-                    nxt[m] += 0.85 * share
-            ranks = nxt
-        for n in adj:
-            assert abs(got[n] - ranks[n]) < 1e-9, n
+        assert max(ranks, key=lambda n: ranks[n]) == 0
+        leaves = {v for n, v in ranks.items() if n != 0}
+        assert len(leaves) == 1  # symmetric leaves tie exactly
+        # undirected graph has no dangling nodes: mass is conserved up
+        # to the floor divisions, which lose under one unit per
+        # directed edge and one per node in each round
+        lost = len(ranks) * scale - sum(ranks.values())
+        assert 0 <= lost < (2 * 6 + len(ranks)) * n_iter
 
 
 class TestPagerankFixed:

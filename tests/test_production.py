@@ -290,3 +290,64 @@ class TestProductionWiring:
         # degenerate configs still run retention, never div-by-zero
         assert retention_cadence(0) == 86400
         assert retention_cadence(10**6) == 1
+
+
+class TestStreamJobScript:
+    """``scripts/stream_job.py``, the spark-submit entry: its deployment
+    branch is one call to ``run_production_stream`` (stubbed here, with
+    the session, so nothing runs on Spark)."""
+
+    ENV = {
+        "APP_NAME": "k2es",
+        "STREAM_NAME": "firehose",
+        "ES_URL": "http://es:9200",
+        "DIM_PATH": "/dims/cf",
+    }
+
+    def _main(self, monkeypatch, run_production_stream) -> int:
+        import importlib.util
+        import sys
+        from pathlib import Path
+
+        from cga_kinesis_to_elasticsearch_spark import session
+        from cga_kinesis_to_elasticsearch_spark.streaming import production
+
+        for k, v in self.ENV.items():
+            monkeypatch.setenv(k, v)
+        monkeypatch.setattr(sys, "argv", ["stream_job.py"])
+        monkeypatch.setattr(sys, "path", list(sys.path))
+        monkeypatch.setattr(session, "get_spark", lambda name: ("spark", name))
+        monkeypatch.setattr(
+            production, "run_production_stream", run_production_stream
+        )
+        script = Path(__file__).resolve().parent.parent / "scripts" / "stream_job.py"
+        spec = importlib.util.spec_from_file_location("stream_job", script)
+        mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(mod)
+        return mod.main()
+
+    def test_deployment_runs_the_production_stream(self, monkeypatch):
+        calls = []
+
+        class _Query:
+            def awaitTermination(self):
+                pass
+
+        def fake(spark, cfg, **kw):
+            calls.append((spark, cfg, kw))
+            return type("Handle", (), {"query": _Query()})()
+
+        assert self._main(monkeypatch, fake) == 0
+        want = EngineConfig.from_env()
+        assert calls == [(("spark", want.app_name), want, {"dim_path": "/dims/cf"})]
+
+    def test_kinesis_source_error_exits_2(self, monkeypatch, capsys):
+        def fake(spark, cfg, **kw):
+            raise RuntimeError(
+                "[DATA_SOURCE_NOT_FOUND] Failed to find the data source: kinesis."
+            )
+
+        assert self._main(monkeypatch, fake) == 2
+        err = capsys.readouterr().err
+        assert "--packages <spark-sql-kinesis>" in err
+        assert "Failed to find the data source: kinesis" in err

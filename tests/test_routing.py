@@ -7,9 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from cga_kinesis_to_elasticsearch_spark.operators.routing import (
+    compile_identifiable,
     compile_route,
-    filter_identifiable,
-    filter_log_messages,
+    is_log_message,
 )
 from cga_kinesis_to_elasticsearch_spark.schemas import RECORD_SCHEMA
 
@@ -45,6 +45,10 @@ def _rec(
     )
 
 
+def _log_messages(df):
+    return df.filter(is_log_message())
+
+
 @pytest.fixture(scope="module")
 def records(spark):
     rows = [
@@ -66,10 +70,10 @@ def records(spark):
 
 class TestRouteSwitch:
     def test_event_type_filter(self, records):
-        assert filter_log_messages(records).count() == 8
+        assert _log_messages(records).count() == 8
 
     def test_active_routes_only(self, records):
-        out = compile_route()(filter_log_messages(records))
+        out = compile_route()(_log_messages(records))
         got = {r.tags.get("source_id", ""): r.index_class for r in out.collect()}
         assert out.count() == 2
         classes = [r.index_class for r in out.collect()]
@@ -78,7 +82,7 @@ class TestRouteSwitch:
         assert patterns == {"GENERIC"}
 
     def test_disabled_routes_resurrected(self, records):
-        out = compile_route(enable_disabled_routes=True)(filter_log_messages(records))
+        out = compile_route(enable_disabled_routes=True)(_log_messages(records))
         by_class = {
             r["index_class"]: r["grok_pattern"]
             for r in out.select("index_class", "grok_pattern").collect()
@@ -95,13 +99,13 @@ class TestRouteSwitch:
     def test_first_match_wins(self, records):
         # row 8 has BOTH /var/log/ prefix and gorouter tag; the switch
         # hits the prefix arm first (drop when disabled)
-        out = compile_route()(filter_log_messages(records))
+        out = compile_route()(_log_messages(records))
         kept_ids = {r.rid for r in out.collect()}
         assert "9" not in kept_ids  # sequence numbers are positional
 
     def test_no_shuffle_in_plan(self, records):
         plan = (
-            compile_route()(filter_log_messages(records))
+            compile_route()(_log_messages(records))
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -109,22 +113,31 @@ class TestRouteSwitch:
         assert "Exchange" not in plan  # narrow ops only
 
 
+def _identifiable(df, rtr_live=False):
+    app_guid, identifiable = compile_identifiable(rtr_live)
+    return df.filter(identifiable).select(app_guid.alias("app_guid"))
+
+
 class TestIdentifiability:
     def test_keeps_app_id(self, spark):
-        from cga_kinesis_to_elasticsearch_spark.schemas import RECORD_SCHEMA
-
         rows = [_rec(app_id="g1"), _rec(app_id="")]
         df = spark.createDataFrame(rows, RECORD_SCHEMA)
-        assert filter_identifiable(df).count() == 1
+        assert [r.app_guid for r in _identifiable(df).collect()] == ["g1"]
 
     def test_rtr_app_id_fallback(self, spark):
-        rows = [_rec(app_id=""), _rec(app_id="")]
+        # the ROUTERACCESS capture struct, NULL where the pattern missed
+        rows = [_rec(app_id=""), _rec(app_id=""), _rec(app_id="", message="x")]
         df = spark.createDataFrame(rows, RECORD_SCHEMA).withColumn(
-            "rtr", F.lit("rtr-guid")
+            "parsed_routeraccess",
+            F.when(
+                F.col("log_message.message") == "hello",
+                F.struct(F.lit("rtr-guid").alias("rtr_app_id")),
+            ),
         )
-        assert filter_identifiable(df, rtr_app_id=F.col("rtr")).count() == 2
+        got = _identifiable(df, rtr_live=True).collect()
+        assert [r.app_guid for r in got] == ["rtr-guid", "rtr-guid"]
 
     def test_null_app_id_dropped(self, spark):
         rows = [_rec(app_id=None)]
         df = spark.createDataFrame(rows, RECORD_SCHEMA)
-        assert filter_identifiable(df).count() == 0
+        assert _identifiable(df).count() == 0

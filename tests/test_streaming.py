@@ -456,64 +456,126 @@ class TestResumeWithNewData:
         assert sink.read_index(spark).count() == before_docs + newly_sent
 
 
+def _park_and_fix(spark, payloads, dim, tmp_path, **stream):
+    """Stream ``payloads`` (raw records) with a junk prefix on every
+    payload, so each row lands in the error bucket; then "fix" the
+    bucket by stripping the prefix. Returns (sink, the stream's
+    StreamConfig)."""
+    from cga_kinesis_to_elasticsearch_spark.sources.records import (
+        read_raw_record_stream,
+    )
+
+    d = tmp_path / "raw"
+    n = payloads.count()
+    payloads.withColumn(
+        "data", F.concat(F.lit(b"\x00junk"), F.col("data"))
+    ).coalesce(1).write.mode("append").parquet(str(d))
+    sink = ParquetIndexSink(tmp_path / "sink")
+    cfg = StreamConfig(
+        checkpoint_location=str(tmp_path / "ck"),
+        available_now=True,
+        pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
+        **stream,
+    )
+    query, metrics = run_stream(
+        spark, read_raw_record_stream(spark, str(d)), lambda s: dim, sink, cfg
+    )
+    drain(query)
+    assert metrics.errors_count == n
+    assert metrics.sent_count == 0
+    # "fix" the payloads in the bucket: strip the junk prefix
+    errs = spark.read.parquet(str(sink.root / "_errors"))
+    fixed = errs.withColumn("data", F.expr("substring(data, 6, 10000000)"))
+    fixed_pd = fixed.toPandas()  # materialize BEFORE clobbering source
+    import shutil
+
+    shutil.rmtree(sink.root / "_errors")
+    spark.createDataFrame(fixed_pd, fixed.schema).write.mode(
+        "overwrite"
+    ).partitionBy("batch_id").parquet(str(sink.root / "_errors"))
+    return sink, cfg
+
+
 class TestErrorReplay:
     def test_fixed_payloads_replay_into_index(
         self, spark, records, dim, tmp_path
     ):
         """Poison rows whose payloads later turn out valid are indexed
-        by replay_errors; truly-corrupt rows stay parked."""
-        from cga_kinesis_to_elasticsearch_spark.sources.records import (
-            encode_records,
-            read_raw_record_stream,
+        by replay_errors."""
+        from cga_kinesis_to_elasticsearch_spark.streaming.replay import (
+            replay_errors,
         )
-        from cga_kinesis_to_elasticsearch_spark.streaming.job import (
-            StreamConfig,
-            drain,
-            run_stream,
+
+        # 30 valid payloads, mangled so they fail decode on first pass
+        sink, cfg = _park_and_fix(
+            spark, encode_records(records.limit(30)), dim, tmp_path
+        )
+        out = replay_errors(spark, sink, dim, cfg)
+        assert out["still_poison"] == 0
+        # 30 raw records -> only the routable+identifiable subset indexes
+        assert out["replayed"] == sink.read_index(spark).count()
+        assert out["replayed"] > 0
+
+    def test_protobuf_payloads_replay_with_the_stream_decoder(
+        self, spark, records, dim, tmp_path
+    ):
+        """A protobuf stream's bucket replays through the stream's own
+        decoder, not a JSON one."""
+        from cga_kinesis_to_elasticsearch_spark.sources.protowire import (
+            decode_protobuf_records,
+            encode_protobuf_records,
         )
         from cga_kinesis_to_elasticsearch_spark.streaming.replay import (
             replay_errors,
         )
 
-        d = tmp_path / "raw"
-        # mangle 30 valid payloads so they fail decode on first pass:
-        # prepend junk that a "fixed decoder" — here, nothing, they stay
-        # broken — plus 5 rows that are valid-but-misrouted to errors
-        good_subset = encode_records(records.limit(30))
-        broken = good_subset.withColumn(
-            "data",
-            F.concat(F.lit(b"\x00junk"), F.col("data")),
+        sink, cfg = _park_and_fix(
+            spark,
+            encode_protobuf_records(records.limit(30)),
+            dim,
+            tmp_path,
+            decoder=decode_protobuf_records,
         )
-        broken.coalesce(1).write.mode("append").parquet(str(d))
-        sink_dir = tmp_path / "sink"
-        sink = __import__(
-            "cga_kinesis_to_elasticsearch_spark.sinks.bulk", fromlist=["b"]
-        ).ParquetIndexSink(sink_dir)
-        cfg = StreamConfig(
-            checkpoint_location=str(tmp_path / "ck"),
-            available_now=True,
-            pipeline=PipelineConfig(allowed_origins=ALLOWED_ORIGINS),
-        )
-        query, metrics = run_stream(
-            spark, read_raw_record_stream(spark, str(d)), lambda s: dim, sink, cfg
-        )
-        drain(query)
-        assert metrics.errors_count == 30
-        assert metrics.sent_count == 0
-        # "fix" the payloads in the bucket: strip the junk prefix
-        errs = spark.read.parquet(str(sink.root / "_errors"))
-        fixed = errs.withColumn(
-            "data", F.expr("substring(data, 6, 10000000)")
-        )
-        fixed_pd = fixed.toPandas()  # materialize BEFORE clobbering source
-        import shutil
-
-        shutil.rmtree(sink.root / "_errors")
-        spark.createDataFrame(fixed_pd, fixed.schema).write.mode(
-            "overwrite"
-        ).partitionBy("batch_id").parquet(str(sink.root / "_errors"))
-        out = replay_errors(spark, sink, dim, cfg.pipeline)
+        out = replay_errors(spark, sink, dim, cfg)
         assert out["still_poison"] == 0
-        # 30 raw records -> only the routable+identifiable subset indexes
         assert out["replayed"] == sink.read_index(spark).count()
         assert out["replayed"] > 0
+
+    def test_replay_runs_before_write(self, spark, records, dim, tmp_path):
+        """Replayed documents pass the stream's cross-batch exact-dedup
+        stage: content the dedup index already holds stays out."""
+        from cga_kinesis_to_elasticsearch_spark.sinks.dedupindex import (
+            dedup_against_index,
+        )
+        from cga_kinesis_to_elasticsearch_spark.streaming.replay import (
+            replay_errors,
+        )
+
+        text = "parsed_generic.log_event"
+        index = str(tmp_path / "didx")
+
+        def exact_dedup(d):
+            return dedup_against_index(d.sparkSession, d, index, text, "doc_id")
+
+        parked = records.limit(60)
+        sink, cfg = _park_and_fix(
+            spark,
+            encode_records(parked),
+            dim,
+            tmp_path,
+            before_write=(exact_dedup,),
+        )
+        # earlier records, under other ids, that carried a third of the
+        # parked content
+        docs = run_pipeline(parked, dim, cfg.pipeline)
+        prior = docs.filter(F.crc32("doc_id") % 3 == 0).withColumn(
+            "doc_id", F.concat(F.lit("prior-"), "doc_id")
+        )
+        exact_dedup(prior)  # registers the prior content
+        seen = {r[0] for r in prior.select(text).collect()} - {None}
+        out = replay_errors(spark, sink, dim, cfg)
+        landed = [r[0] for r in sink.read_index(spark).select(text).collect()]
+        assert seen and landed
+        assert seen.isdisjoint(landed)
+        assert out["replayed"] == len(landed)
+        assert out["still_poison"] == 0
